@@ -1,25 +1,29 @@
-"""Checkpoint lifecycle helpers (r9, VERDICT r8 item 2).
+"""The few ``localCheckpoint`` sites left, and how their blocks free.
 
-Several operators eagerly ``localCheckpoint`` a twice-consumed
-intermediate (a hash index, a shingle table, a centered matrix) so the
-expensive subtree runs once. ``localCheckpoint`` truncates lineage, so
-those blocks are unrecoverable once released — which historically meant
-nobody released them, and a long session running many registry calls
-accumulated pinned executor storage and GC pressure (measured r8:
-curation_funnel 4.6 s in-session vs 0.88 s isolated on the same host;
-the bench suite dropped 142.5 -> 135.1 s when swept).
+Registry operators build lazy plans: a subtree consumed twice is
+either reworked so one aggregate feeds every consumer, or left to
+Spark's exchange reuse. What still pins executor blocks is:
 
-The fix at the source: when the operator's RESULT is small (top-K,
-per-pair audit rows, probe summaries), materialize the result into its
-OWN one-block checkpoint and release the big intermediates before
-returning — the caller gets a self-contained frame that references
-nothing, and the session keeps only result-sized blocks. Iterative
-operators (CC, PageRank, k-core, LPA) release round k's checkpoint as
-soon as round k+1 materializes, keeping at most one round pinned.
+- the iterative rounds: connected components (``_cc_labels``),
+  PageRank, label propagation and k-core (operators/dedup.py). Each
+  round truncates its lineage with a checkpoint; CC and PageRank
+  release round k once round k+1 materializes, and the returned plans
+  read the round checkpoints;
+- the named fit steps, which checkpoint a training input, collect a
+  small model to the driver and release the input with
+  ``release_checkpoint``: ``stats_robust_mad`` (operators/extras.py),
+  ``search_prf_expand`` and ``search_mmr_diversify``
+  (operators/retrieval.py), BPE ``learn_merges`` (operators/text.py)
+  and ``learn_block_quantizer`` (functions/blocks.py);
+- the dup-graph memo: the near-dup edge set and the CC labels, shared
+  by the graph operators and kept as protected checkpoints below.
 
-For results too big to re-checkpoint (corpus-sized projections), the
-operator keeps its final checkpoint pinned and the session-level
-``session.sweep_persisted`` remains the hygiene valve.
+``session.sweep_persisted`` frees everything but the protected memo.
+A plan that reads an iterative round's checkpoint cannot be collected
+after a sweep (the lineage is truncated); a plan over the dup-graph
+memo survives sweeps but not the memo's eviction (past four corpora
+per session); every other registry result recomputes from its
+sources.
 """
 
 from __future__ import annotations
@@ -43,39 +47,6 @@ def release_checkpoint(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
     else:  # cached (non-checkpoint) frame: the cache manager path
         df.unpersist()
-
-
-# Plan tests flip this to True (monkeypatch) to inspect the REAL
-# computation plan: a checkpointed result explains itself as a bare
-# `Scan ExistingRDD`, hiding the joins/windows the test pins.
-PLAN_INSPECTION_MODE = False
-
-
-def checkpoint_result(result: DataFrame, *released: DataFrame) -> DataFrame:
-    """Eagerly checkpoint a SMALL result frame, then release the
-    checkpoint blocks of the intermediates it was derived from.
-
-    Order matters: the result must materialize BEFORE the inputs
-    release (lineage is truncated — released blocks are gone, not
-    recomputable). Returns the checkpointed result.
-    """
-    if PLAN_INSPECTION_MODE:
-        return result
-    res = result.localCheckpoint(eager=True)
-    for df in released:
-        release_checkpoint(df)
-    return res
-
-
-def checkpoint_intermediate(df: DataFrame) -> DataFrame:
-    """Eagerly checkpoint a reused intermediate — except in
-    PLAN_INSPECTION_MODE, where the frame passes through so plan tests
-    can pin the computation ABOVE it (a checkpoint explains itself as
-    a bare `Scan ExistingRDD`). Pair with ``checkpoint_result(result,
-    intermediate)`` so the blocks release at operator exit."""
-    if PLAN_INSPECTION_MODE:
-        return df
-    return df.localCheckpoint(eager=True)
 
 
 # --- protected checkpoints -------------------------------------------------

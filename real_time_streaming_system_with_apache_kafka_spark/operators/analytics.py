@@ -19,10 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_intermediate,
-    checkpoint_result,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.exact import (
     ORACLE_REVENUE_SUM,
     davg,
@@ -499,9 +495,11 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     data is touched EXACTLY ONCE (r9: one scan, one shuffle to
     baskets, one pattern-grain histogram shuffle): per-brand supports
     (orders containing the brand) and the order total are derived
-    from the checkpointed pattern histogram — sum of n_orders_p over
-    patterns containing the brand, and sum of n_orders_p — instead of
-    re-scanning and re-shuffling lineitem a second and third time."""
+    from the pattern histogram — sum of n_orders_p over patterns
+    containing the brand, and sum of n_orders_p — instead of
+    re-scanning and re-shuffling lineitem a second and third time.
+    The histogram's consumers share its one shuffle through Spark's
+    exchange reuse; the plan builds without running a job."""
     li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     brands = load(spark, "part", sf_dir).select("p_partkey", "p_brand")
     b = li.join(F.broadcast(brands), li.l_partkey == brands.p_partkey).select(
@@ -510,9 +508,7 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = b.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("p_brand")).alias("items")
     )
-    patterns = checkpoint_intermediate(
-        sets.groupBy("items").agg(F.count(F.lit(1)).alias("n_orders_p"))
-    )
+    patterns = sets.groupBy("items").agg(F.count(F.lit(1)).alias("n_orders_p"))
     pairs = (
         patterns.select(
             F.explode(
@@ -536,7 +532,7 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n_orders_p").alias("n_item"))
     )
     n_orders = patterns.agg(F.sum("n_orders_p").alias("n_orders"))
-    result = (
+    return (
         pairs.join(
             F.broadcast(
                 sup.select(
@@ -570,9 +566,6 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("brand_a", "brand_b")
     )
-    # Brand-pair output is tiny (≤ brands² rows): self-checkpoint it
-    # and free the pattern-histogram blocks at exit (r9 leak fix).
-    return checkpoint_result(result, patterns)
 
 
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,15 +756,11 @@ def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    # The customer aggregate feeds four consumers (bounds, bucketing,
-    # totals, deciles); materialize it once — the standard move for a
-    # multi-consumer DAG — so the orders corpus is scanned exactly
-    # once instead of per consumer.
-    cust = (
-        orders.groupBy("o_custkey")
-        .agg(F.sum("cents").alias("cents"))
-        .localCheckpoint()
-    )
+    # The customer aggregate feeds the bounds and the bucketing, and
+    # the ranked rows feed the totals and the deciles; each consumer
+    # pair shares one shuffle through Spark's exchange reuse, so the
+    # orders corpus is scanned once and the plan builds without a job.
+    cust = orders.groupBy("o_custkey").agg(F.sum("cents").alias("cents"))
     bounds = cust.agg(
         *[
             F.expr(
@@ -834,9 +823,7 @@ def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     wd = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    # Ten-row result: checkpoint it and release the customer-grain
-    # aggregate's blocks at exit (r9 leak fix).
-    return checkpoint_result(
+    return (
         deciles.withColumn(
             "cum_revenue_cents", F.sum("revenue_cents").over(wd)
         )
@@ -856,8 +843,7 @@ def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div (n * cast(s0 as decimal(38,0)))"
             ).alias("gini_ppm"),
         )
-        .orderBy("decile"),
-        cust,
+        .orderBy("decile")
     )
 
 

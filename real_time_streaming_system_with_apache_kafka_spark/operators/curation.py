@@ -38,9 +38,6 @@ from real_time_streaming_system_with_apache_kafka_spark.operators.text import (
     ALL_STOPWORDS,
     ALL_SW_SQL,
 )
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_intermediate,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
     regex_word_ngrams,
 )
@@ -1199,13 +1196,11 @@ def quality_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical everywhere. Rank-equivalent to mean log-perplexity
     for flagging the repetitive/templated tail.
 
-    Scale shape: ONE shuffle of the bigram stream builds the bigram
-    counts; the predecessor counts derive from them by a second,
-    vocabulary-sized aggregation (n1 = sum over w2 of n12 — no second
-    pass over the corpus), and the model (bigram -> surprise) joins
-    back to the stream in a single hash join — at production scale the
-    model side is the small side (a trained model table) and
-    broadcasts. No driver-side model state. The rebalanced load fans
+    Scale shape: ONE corpus explode builds the per-doc bigram counts
+    (tf); the model counts are window sums over tf (n12 per bigram, n1
+    per predecessor — no second pass over the corpus and no join back),
+    and one shuffle to the doc grain rolls the score up. No driver-side
+    model state, no Spark job at plan build. The rebalanced load fans
     the bigram explode past a degenerate single-rowgroup input."""
     docs = load_rebalanced(spark, "documents", sf_dir)
     # Codegen'd regex bigram pass (the r4 dedup lesson: interpreted
@@ -1227,37 +1222,21 @@ def quality_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Per-doc bigram term frequencies FIRST: repetitive documents (the
     # very thing this score flags) collapse to one row per distinct
-    # bigram, so the model join and final rollup see the compressed
-    # stream; n12 then derives from tf without a second corpus pass.
+    # bigram, so the model windows and final rollup see the compressed
+    # stream.
     # A/B at sf1: ~15-20% faster than joining the raw stream, values
     # bit-identical (sum of c*surprise == sum of per-row surprise).
-    # r9 optimization round: the r8 plan computed the corpus explode +
-    # tf aggregate THREE times (scoring side, n12 subtree, n1 subtree —
-    # column pruning makes the subtrees non-identical, so Catalyst
-    # reuses nothing; 3 Generate + 3 parquet scans in the captured
-    # plan). Two structural fixes, values bit-identical:
-    #   - tf checkpoints once (guide §1.2: don't recompute; §5 sweep
-    #     covers the corpus-sized block, same contract as the other
-    #     big-intermediate operators);
-    #   - n1 becomes a window sum over n12 partitioned by w1 instead of
-    #     a groupBy+self-join — one pass over the bigram vocabulary,
-    #     one fewer shuffle, and n12 is consumed once (exact integer
-    #     sum either way).
-    # EAGER (r10, advisor note): this checkpoint pins a corpus-sized
-    # localCheckpoint with no checkpoint_result pairing (the RETURNED
-    # plan still reads it — session-level sweep releases it, the
-    # module's documented big-intermediate contract), and it runs the
-    # full corpus tf job AT PLAN-CONSTRUCTION TIME — callers that only
-    # compile plans still trigger that job. Registry comment carries
-    # the same flag.
-    tf = checkpoint_intermediate(
-        pairs.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    # The model is two window sums over tf: n12 partitioned by
+    # (w1, w2) and n1 by w1, so tf is the only consumer of the corpus
+    # explode and the model needs no aggregate-and-join-back. Hash
+    # partitioning on w1 also clusters (w1, w2), so both windows can
+    # share one exchange. Exact integer sums either way.
+    tf = pairs.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    scored = (
+        tf.withColumn("n1", F.sum("c").over(Window.partitionBy("w1")))
+        .withColumn("n12", F.sum("c").over(Window.partitionBy("w1", "w2")))
+        .withColumn("surprise_ppm", F.expr("n1 * 1000000 div n12"))
     )
-    n12 = tf.groupBy("w1", "w2").agg(F.sum("c").alias("n12"))
-    model = n12.withColumn(
-        "n1", F.sum("n12").over(Window.partitionBy("w1"))
-    ).withColumn("surprise_ppm", F.expr("n1 * 1000000 div n12"))
-    scored = tf.join(model, ["w1", "w2"])
     return scored.groupBy("doc_id").agg(
         F.sum("c").alias("n_bigrams"),
         F.sum(F.col("c") * F.col("surprise_ppm")).alias("surprise_sum_ppm"),
@@ -1370,8 +1349,6 @@ QUERIES = {
     "profile_dup_rate_by_source": profile_dup_rate_by_source,
     "chunk_documents": chunk_documents,
     "quality_weighted_terms": quality_weighted_terms,
-    # EAGER: runs the corpus tf job at plan-construction time (the
-    # checkpointed model intermediate) — see the operator's comment.
     "quality_lm_surprise": quality_lm_surprise,
     "quality_domain_calibrated": quality_domain_calibrated,
     "quality_classifier_eval": quality_classifier_eval,

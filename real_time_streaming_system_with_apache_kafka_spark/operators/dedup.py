@@ -31,8 +31,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_intermediate,
-    checkpoint_result,
     protect_checkpoint,
     release_checkpoint,
     unprotect_and_release,
@@ -175,15 +173,13 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_pairs(sh: DataFrame) -> DataFrame:
     """LSH candidate pairs with signature-agreement estimate, from an
-    EXPLODED (doc_id, s) shingle DataFrame. Callers choose the explode
-    form: the standalone query keeps the whole shingle expression
-    INSIDE the generator (InferFiltersFromGenerate skips complex
-    generators — with a plain column reference, the inferred
-    ``size(sh) > 0`` filter is substituted through the projection and
-    pushed below the repartition, re-evaluating the full shingle
-    transform on the single-task scan: a measured 3x regression);
-    the verify query explodes a checkpointed array column, where the
-    inferred filter is a cheap size check over materialized rows."""
+    EXPLODED (doc_id, s) shingle DataFrame. The caller keeps the whole
+    shingle expression INSIDE the generator (InferFiltersFromGenerate
+    skips complex generators — with a plain column reference, the
+    inferred ``size(sh) > 0`` filter is substituted through the
+    projection and pushed below the repartition, re-evaluating the full
+    shingle transform on the single-task scan: a measured 3x
+    regression)."""
     # Signatures via explode -> one codegen'd projection of all
     # n_hashes md5 columns -> partial-min aggregation. Equivalent to
     # the per-row `minhash_signature` helper (min over the same set)
@@ -710,7 +706,9 @@ def sample_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH banding join that produces the edges runs ONCE: the same
     checkpointed edge frame feeds both the CC rounds (via _cc_labels)
     and the audit's crossing join — the r5 form recomputed it for the
-    audit and paid the whole banding stage twice."""
+    audit and paid the whole banding stage twice. The labeled frame's
+    three consumers share its doc_id shuffle through Spark's exchange
+    reuse."""
     docs = load(spark, "documents", sf_dir)
     edges = _dup_edges(spark, sf_dir)
     comp = _cc_labels(spark, sf_dir, docs).select(
@@ -721,7 +719,7 @@ def sample_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "component",
         _md5_split(F.col("component")).alias("split"),
         _md5_split(F.col("doc_id")).alias("naive_split"),
-    ).localCheckpoint(eager=False)
+    )
     und = edges.filter(F.col("src") < F.col("dst"))
     crossing = (
         und.join(
@@ -750,18 +748,14 @@ def sample_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # Two-row summary: checkpoint it and release the labeled corpus
-    # checkpoint at exit (r9 leak fix; the edge frame and the CC label
-    # frame are the shared protected memos).
-    return checkpoint_result(
+    return (
         labeled.groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count_distinct("component").alias("n_components"),
         )
         .crossJoin(F.broadcast(crossing))
-        .orderBy("split"),
-        labeled,
+        .orderBy("split")
     )
 
 
@@ -861,7 +855,7 @@ def graph_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _dup_edges(spark, sf_dir)
     nodes = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     score = nodes.select(F.col("src").alias("doc_id"), "deg", F.lit(1.0).alias("score"))
-    ckpts: list[DataFrame] = []
+    prev_ckpt = None
     for _iter in range(PR_ITERS):
         contribs = edges.join(
             score.select(F.col("doc_id").alias("src"), "deg", "score"), "src"
@@ -897,14 +891,14 @@ def graph_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             # every-2 keeps plans bounded at the same asymptotic cost
             # (measured ~0.6 s/round saved at sf0.1).
             score = score.localCheckpoint(eager=True)
-            ckpts.append(score)
-    # Top-100 result: checkpoint it and release the edge frame plus
-    # every round checkpoint at exit (r9 leak fix).
-    return checkpoint_result(
+            if prev_ckpt is not None:
+                release_checkpoint(prev_ckpt)  # score is materialized
+            prev_ckpt = score
+    # The top-100 plan reads the last round's checkpoint.
+    return (
         score.select("doc_id", F.col("deg").alias("n_neighbors"), "score")
         .orderBy(F.col("score").desc(), "doc_id")
-        .limit(100),
-        *ckpts,
+        .limit(100)
     )
 
 
@@ -942,14 +936,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
     # Consumed three times below (both wedge legs + the closing-edge
-    # probe); the DataFrame API does no common-subplan reuse, so
-    # materialize the orientation once instead of re-running the two
-    # degree joins per consumer (same pattern as _dup_edges).
+    # probe). The orientation is dup-graph-sized and its degree joins
+    # read the memoized edge set, so the consumers recompute it (the
+    # two wedge legs share one exchange through Spark's reuse).
     oriented = with_deg.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=True)
+    )
     o1 = oriented.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
     o2 = oriented.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     wedges = o1.join(o2, "u").filter(
@@ -959,14 +953,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     tris = wedges.join(closing, ["x", "y"]).select("u", "x", "y")
     members = tris.select(F.explode(F.array("u", "x", "y")).alias("doc_id"))
-    # Per-doc-count result (dup-graph-sized): checkpoint it and release
-    # the orientation blocks at exit (r9 leak fix; the edge frame is
-    # the shared protected memo).
-    return checkpoint_result(
+    return (
         members.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy(F.col("n_triangles").desc(), "doc_id"),
-        oriented,
+        .orderBy(F.col("n_triangles").desc(), "doc_id")
     )
 
 
@@ -1107,19 +1097,17 @@ def _verified_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment direction, overlap coefficient) is a ratio of these
     exact integers.
 
-    Shingle ONCE: the same materialized (doc_id, sh) feeds both the
-    signature path and the verify arrays (without the checkpoint,
-    Spark would re-scan and re-shingle the corpus for each branch);
-    the intersect runs once per undirected candidate pair."""
-    ss = _shingle_sets(spark, sf_dir).localCheckpoint(eager=True)
-    cand = _lsh_pairs(ss.select("doc_id", F.explode("sh").alias("s")))
+    The candidates are ``dedup_minhash_lsh`` itself; the verify arrays
+    shingle the same repartitioned scan (Spark reuses that exchange,
+    so the corpus is read once), and both join legs share one doc_id
+    shuffle of the shingle sets. The intersect runs once per
+    undirected candidate pair."""
+    cand = dedup_minhash_lsh(spark, sf_dir)
+    ss = _shingle_sets(spark, sf_dir)
     a = ss.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = ss.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    # Candidate-pair-sized triples: checkpoint them and release the
-    # corpus shingle-set blocks at exit (r9 leak fix) — both consumers
-    # aggregate these triples anyway.
-    return checkpoint_result(
+    return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .select(
@@ -1129,8 +1117,7 @@ def _verified_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_common.alias("n_common"),
             F.size("sh_a").alias("n_a"),
             F.size("sh_b").alias("n_b"),
-        ),
-        ss,
+        )
     )
 
 
@@ -1490,7 +1477,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("lbl")
     )
-    ckpts: list[DataFrame] = []
     for _round in range(LPA_ITERS):
         census = (
             edges.join(
@@ -1508,15 +1494,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lbl")
             .localCheckpoint(eager=False)
         )
-        ckpts.append(labels)
-    # Dup-graph-node-sized result: checkpoint it and release every
-    # round's label checkpoint at exit (r9 leak fix — LPA_ITERS rounds
-    # pinned -> one result block; the edge frame is the shared memo).
-    return checkpoint_result(
-        labels.select("doc_id", F.col("lbl").alias("community")).orderBy(
-            "doc_id"
-        ),
-        *ckpts,
+    # The result plan reads the last round's label checkpoint.
+    return labels.select("doc_id", F.col("lbl").alias("community")).orderBy(
+        "doc_id"
     )
 
 
@@ -1594,23 +1574,37 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # The winnowed set (~1/W of the gram stream) is consumed three
-    # ways (df cap, per-doc counts, pairing): checkpoint it so the
-    # md5 + window-min chain runs ONCE, not per consumer.
-    fp_all = checkpoint_intermediate(
+    # ways (df cap, per-doc counts, pairing). Hash-partitioning it on
+    # the fingerprint once gives every consumer the same exchange,
+    # which Spark reuses, so the md5 + window-min chain runs ONCE. The
+    # reuse needs identical subtrees below that exchange, so the
+    # not-null filters the joins below would infer (and push under it
+    # for some consumers only) are stated here for all of them; they
+    # drop nothing (doc_id is the documents key, and minh is a least()
+    # over non-null hashes).
+    fp_all = (
         hashed.select("doc_id", F.explode(mins).alias("minh"))
+        .filter(F.col("doc_id").isNotNull() & F.col("minh").isNotNull())
+        .repartition("minh")
     )
-    # Drop boilerplate by ANTI-joining the HUB set (df > cap): hubs
-    # are few by definition (the rare fingerprints are the keepers),
-    # so the anti side broadcasts at any corpus size — the keep-set
-    # inner join shuffled the corpus-sized winnowed set instead.
+    # Drop boilerplate HUB fingerprints (df > cap): hubs are few by
+    # definition (the rare fingerprints are the keepers), so the hub
+    # set broadcasts at any corpus size — the keep-set inner join
+    # shuffled the corpus-sized winnowed set instead. The df count
+    # reads doc_id so column pruning leaves the hub side's exchange
+    # input whole, and the hubs drop through a left join + null test:
+    # Spark pushes an anti-join below the repartition, which would
+    # give the consumers a second, unshared exchange.
     hubs = (
         fp_all.groupBy("minh")
-        .agg(F.count(F.lit(1)).alias("df"))
+        .agg(F.count("doc_id").alias("df"))
         .filter(F.col("df") > WIN_MAXDF)
-        .select("minh")
+        .select("minh", F.lit(True).alias("hub"))
     )
-    fp = checkpoint_intermediate(
-        fp_all.join(F.broadcast(hubs), "minh", "left_anti")
+    fp = (
+        fp_all.join(F.broadcast(hubs), "minh", "left")
+        .filter(F.col("hub").isNull())
+        .drop("hub")
     )
     counts = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nfp"))
     # Candidate pairs: equality self-join on the fingerprint value —
@@ -1636,7 +1630,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = counts.select(
         F.col("doc_id").alias("doc_b"), F.col("nfp").alias("nfp_b")
     )
-    result = (
+    return (
         pairs.join(ca, "doc_a")
         .join(cb, "doc_b")
         .select(
@@ -1651,9 +1645,6 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    # Pair-audit output is small: self-checkpoint and free the
-    # winnowed-set blocks at exit (r9 leak fix).
-    return checkpoint_result(result, fp_all, fp)
 
 
 KCORE_K = 2  # core threshold
@@ -1683,7 +1674,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _dup_edges(spark, sf_dir)
     alive = edges.select(F.col("src").alias("doc_id")).distinct()
     result = alive.select("doc_id", F.lit(0).alias("peeled_round"))
-    ckpts: list[DataFrame] = []
     for rnd in range(1, KCORE_ROUNDS + 1):
         deg = (
             edges.join(
@@ -1707,19 +1697,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("peeled_round"),
         )
         alive = survivors.localCheckpoint(eager=False)
-        ckpts.append(alive)
-    # Dup-graph-node-sized result: checkpoint it and release every
-    # round's survivor checkpoint at exit (r9 leak fix — KCORE_ROUNDS
-    # rounds pinned -> one result block; the edge frame is the shared
-    # protected memo).
-    return checkpoint_result(
-        result.select(
-            "doc_id",
-            "peeled_round",
-            (F.col("peeled_round") == 0).alias("in_core"),
-        ).orderBy("doc_id"),
-        *ckpts,
-    )
+    # The result plan reads every round's survivor checkpoint.
+    return result.select(
+        "doc_id",
+        "peeled_round",
+        (F.col("peeled_round") == 0).alias("in_core"),
+    ).orderBy("doc_id")
 
 
 ER_ADJ = "red,blue,small,large,old,new,hot,cold"

@@ -42,9 +42,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_result,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.exact import (
     ORACLE_REVENUE_SUM,
     revenue_dec,
@@ -375,8 +372,8 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: ONE scan builds the per-file stats table (min/max per
     column + per-probe exact match counts folded into the same hash
     aggregate, metadata-sized output); the per-probe rollups are
-    aggregates over that localCheckpointed metadata — a 100 TB table
-    is ~a million metadata rows. Zone-map soundness (a skipped file
+    one aggregate over that metadata — a 100 TB table is ~a million
+    metadata rows. Zone-map soundness (a skipped file
     contains no matching row) is pinned in tests by construction:
     match counts sum identically over scanned files only."""
     ev = load(spark, "events", sf_dir).select(
@@ -398,45 +395,42 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"match_{pid}")
         for pid, col, lo, hi in ZONE_PROBES
     ]
-    files = (
-        ev.groupBy(F.expr(f"event_id div {ZONE_FILE_ROWS}").alias("file_id"))
-        .agg(*aggs)
-        .localCheckpoint(eager=True)
-    )
-    per_probe = []
+    files = ev.groupBy(
+        F.expr(f"event_id div {ZONE_FILE_ROWS}").alias("file_id")
+    ).agg(*aggs)
+    # One aggregate over the file stats computes every probe's rollup;
+    # the probes then unfold into rows, so the stats table has a
+    # single consumer.
+    rollups = []
     for pid, col, lo, hi in ZONE_PROBES:
         skipped = (F.col(f"mx_{col}") < F.lit(lo)) | (
             F.col(f"mn_{col}") >= F.lit(hi)
         )
-        per_probe.append(
-            files.agg(
+        rollups.append(
+            F.struct(
+                F.lit(pid).alias("probe_id"),
+                F.lit(f"{col} in [{lo},{hi})").alias("predicate"),
                 F.count(F.lit(1)).alias("n_files"),
                 F.count_if(skipped).alias("n_skipped_files"),
                 F.count_if(~skipped).alias("n_scanned_files"),
-                F.sum(
-                    F.when(~skipped, F.col("n_rows")).otherwise(0)
-                ).cast("bigint").alias("rows_scanned"),
+                F.sum(F.when(~skipped, F.col("n_rows")).otherwise(0))
+                .cast("bigint")
+                .alias("rows_scanned"),
                 F.sum(f"match_{pid}").cast("bigint").alias("rows_matched"),
-            ).select(
-                F.lit(pid).alias("probe_id"),
-                F.lit(f"{col} in [{lo},{hi})").alias("predicate"),
-                "n_files",
-                "n_skipped_files",
-                "n_scanned_files",
-                "rows_scanned",
-                "rows_matched",
-                F.expr(
-                    "cast(1000000 AS bigint) * (rows_scanned - rows_matched)"
-                    " div greatest(rows_scanned, 1)"
-                ).alias("scan_waste_ppm"),
             )
         )
-    out = per_probe[0]
-    for df in per_probe[1:]:
-        out = out.unionByName(df)
-    # Probe-count-sized result: checkpoint it and release the zone-map
-    # metadata blocks at exit (r9 leak fix).
-    return checkpoint_result(out.orderBy("probe_id"), files)
+    return (
+        files.agg(F.array(*rollups).alias("probes"))
+        .select(F.inline("probes"))
+        .withColumn(
+            "scan_waste_ppm",
+            F.expr(
+                "cast(1000000 AS bigint) * (rows_scanned - rows_matched)"
+                " div greatest(rows_scanned, 1)"
+            ),
+        )
+        .orderBy("probe_id")
+    )
 
 
 def _zonemap_oracle_sql() -> str:

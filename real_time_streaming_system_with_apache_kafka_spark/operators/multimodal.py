@@ -24,9 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_result,
-)
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load
 
 DECODE_SCHEMA = (
@@ -327,7 +324,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload with an Arrow-batched kernel, (2) generate candidates by
     MULTI-INDEX HAMMING blocking — split the hash into PH_BANDS bands;
     by pigeonhole, any pair within hamming PH_BANDS-1 agrees exactly on
-    at least one band, so band-equality joins give FULL recall at
+    at least one band, so band-equality groups give FULL recall at
     threshold PH_HAMMING — and (3) verify candidates with the exact
     bit_count(xor) distance. No all-pairs comparison anywhere.
 
@@ -339,22 +336,19 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as mm_decode_metadata.
 
     Scale shape: hashing is embarrassingly parallel over Arrow
-    batches; the band join shuffles (band, key) pairs (4 rows per doc);
+    batches; the band aggregate shuffles (band, key) pairs (4 rows per doc);
     verification touches only colliding pairs. This is dedup_simhash's
     multimodal cousin with the hamming-RADIUS (not identical-bucket)
     semantics real pHash dedup needs."""
     docs = load(spark, "documents", sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    # Materialize the hash table once: the band self-join would
-    # otherwise run the Arrow kernel TWICE (Spark does not reuse
-    # exchanges across Python-UDF subplans — verified 2 MapInPandas
-    # nodes in the executed plan before this checkpoint). 16 bytes/doc,
-    # exactly the hash index a production image-dedup pipeline persists.
-    ph = (
-        with_binary_payload(docs)
-        .mapInPandas(make_phash_batches(), "doc_id long, phash long")
-        .localCheckpoint(eager=False)
+    # The hash table has ONE consumer: Spark does not reuse exchanges
+    # across Python-UDF subplans (a band self-join ran the Arrow kernel
+    # twice), so candidates come from one (band, key) aggregate whose
+    # groups pair up in-row instead of from a self-join.
+    ph = with_binary_payload(docs).mapInPandas(
+        make_phash_batches(), "doc_id long, phash long"
     )
     band_width = PH_BITS // PH_BANDS
     # Logical (unsigned) shift: phash is the signed reinterpretation of
@@ -377,34 +371,36 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "phash", "bk.band", "bk.key")
-    a = bands.alias("a")
-    b = bands.alias("b")
+    # Members of one (band, key) bucket, sorted by doc_id; each member
+    # pairs with the ones after it, so doc_a < doc_b. A pair colliding
+    # in several bands appears once per band: distinct folds them.
+    buckets = (
+        bands.groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "phash"))).alias("m"))
+        .filter(F.size("m") >= 2)
+    )
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        buckets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(m, (x, i) ->"
+                    " transform(slice(m, i + 2, size(m)), y -> struct("
+                    "x.doc_id AS doc_a, y.doc_id AS doc_b,"
+                    " x.phash AS ph_a, y.phash AS ph_b))))"
+                )
+            ).alias("p")
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.phash").alias("ph_b"),
-        )
+        .select("p.*")
         .distinct()
     )
-    # Near-dup-pairs result (small): checkpoint it and release the
-    # corpus hash-table blocks at exit (r9 leak fix).
-    return checkpoint_result(
+    return (
         cand.select(
             "doc_a",
             "doc_b",
             F.expr("bit_count(ph_a ^ ph_b)").alias("hamming"),
         )
         .filter(F.col("hamming") <= PH_HAMMING)
-        .orderBy("doc_a", "doc_b"),
-        ph,
+        .orderBy("doc_a", "doc_b")
     )
 
 

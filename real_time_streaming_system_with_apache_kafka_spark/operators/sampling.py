@@ -18,9 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_result,
-)
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load
 
 HOLDOUT_PCT = 10
@@ -533,38 +530,27 @@ def stats_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("d_num"),
         )
-        .localCheckpoint(eager=False)  # consumed by max agg AND argmax
     )
-    stats = diffs.agg(
+    # One aggregate takes the distance and where it is attained: the
+    # max of (d_num, -cents) is the largest d_num, at the smallest value
+    # attaining it.
+    return diffs.agg(
         F.min("n1").alias("n_train"),
         F.min("n2").alias("n_test"),
         F.count(F.lit(1)).alias("n_distinct_values"),
-        F.max("d_num").alias("d_num_max"),
-    )
-    arg = (
-        diffs.join(
-            F.broadcast(stats.select("d_num_max")),
-            F.col("d_num") == F.col("d_num_max"),
-        )
-        .agg(F.min("cents").alias("argmax_cents"))
-    )
-    # One-row result: checkpoint it and release the value-distribution-
-    # sized diffs frame at exit (r9 leak fix).
-    return checkpoint_result(
-        F.broadcast(stats)
-        .crossJoin(arg)
-        .select(
-            "n_train",
-            "n_test",
-            "n_distinct_values",
-            F.expr(
-                "cast(d_num_max * cast(1000000 as decimal(38,0))"
-                " div greatest(n_train * cast(n_test as decimal(38,0)), 1)"
-                " as bigint)"
-            ).alias("d_ppm"),
-            "argmax_cents",
+        F.max(F.struct("d_num", (-F.col("cents")).alias("neg_cents"))).alias(
+            "best"
         ),
-        diffs,
+    ).select(
+        "n_train",
+        "n_test",
+        "n_distinct_values",
+        F.expr(
+            "cast(best.d_num * cast(1000000 as decimal(38,0))"
+            " div greatest(n_train * cast(n_test as decimal(38,0)), 1)"
+            " as bigint)"
+        ).alias("d_ppm"),
+        (-F.col("best.neg_cents")).alias("argmax_cents"),
     )
 
 

@@ -23,9 +23,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_result,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     cosine,
     oracle_cosine,
@@ -340,7 +337,13 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             lo = 0
             while lo < len(q64):
                 mx = int(np.abs(q64[lo : lo + 16384]).max(initial=1))
-                step = max(1, min(16384, (1 << 62) // (mx * mx)))
+                if mx * mx >= 1 << 62:
+                    # Even one row's products would leave int64.
+                    raise ValueError(
+                        f"embed_pca_power: |q| = {mx} breaks the exact "
+                        "int64 Gram bound |q|^2 < 2^62"
+                    )
+                step = min(16384, (1 << 62) // (mx * mx))
                 sub = q64[lo : lo + step]
                 lo += step
                 n_tot += len(sub)
@@ -710,18 +713,20 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector, IDS ONLY) broadcasts, so the training corpus never
     shuffles through the join. Collisions dedup in ONE aggregation
     keyed by train_id (collect_set of bench ids — a pair hit via
-    several tables/probes enters the set once), the ONLY exchange in
-    the plan; its payload is the training embedding once per
-    candidate-bearing train vector plus the id set, instead of r9's
-    two payload-free exchanges + per-collision re-scoring. The Arrow
-    cosine kernel then scores each DISTINCT (train, bench) pair
+    several tables/probes enters the set once); its exchange carries
+    the training embedding once per candidate-bearing train vector
+    plus the id set, instead of r9's per-collision re-scoring. The
+    Arrow cosine kernel then scores each DISTINCT (train, bench) pair
     exactly once — the bench embedding re-attaches map-side from a
     second, fan-out-free broadcast — and the best-candidate pick is a
-    max_by aggregate that reuses the train_id partitioning (no second
-    exchange, no sort). Values identical: cos is a deterministic
-    function of (te, be), so score-after-dedup equals
-    first-over-duplicate-scores. The corpus-sized LSH signature pass
-    is one Arrow batch matmul."""
+    row_number window (cos desc, bench_id asc) behind a SECOND
+    hashpartitioning(train_id) exchange: the kernel's ArrowEvalPython
+    drops the aggregate's output partitioning in Spark 4.1, so the
+    window cannot reuse it. That second exchange carries scalar rows
+    only (train_id, n, bench_id, cos), no embedding. Values identical:
+    cos is a deterministic function of (te, be), so score-after-dedup
+    equals first-over-duplicate-scores. The corpus-sized LSH signature
+    pass is one Arrow batch matmul."""
     emb = load(spark, "embeddings", sf_dir).filter(
         F.size("embedding") == EMBEDDING_DIM
     )
@@ -773,11 +778,12 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cos", cosine(F.col("te"), F.col("be")))
     )
     # Best candidate per train vector: the r9 window pick
-    # (cos desc, bench_id asc), which reuses the aggregation's
-    # hashpartitioning(train_id) — one local sort, no exchange.
+    # (cos desc, bench_id asc) over its own scalar-only
+    # hashpartitioning(train_id) exchange — ArrowEvalPython drops the
+    # aggregation's partitioning, so the window cannot reuse it.
     # (A max_by(struct) aggregate was measured first: its struct
     # buffer falls back to SortAggregate and EnsureRequirements adds
-    # a second exchange for the widened grouping key — strictly worse.)
+    # an exchange for the widened grouping key — strictly worse.)
     w = Window.partitionBy("train_id").orderBy(
         F.col("cos").desc(), F.col("bench_id")
     )
@@ -1470,11 +1476,13 @@ SQ_SHORTLIST = 50  # same rerank budget as the flat PQ scan
 # 7dp-quantize, L2-normalize (IEEE sqrt/divide are correctly rounded,
 # so doubles agree bit-for-bit with numpy and DuckDB), re-quantize to
 # integer-valued bigints. No Python UDF, unlike PQ's argmin encode.
-# Built as CHAINED per-row columns, not one nested expression: Spark
-# does not hoist loop-invariant subexpressions out of lambda bodies,
-# so embedding the norm aggregate inside the re-quantize transform
-# re-evaluates it once PER ELEMENT (measured 64x: 5.9s -> 0.2s for
-# the 2k-vector sf0.1 encode pass).
+# Spark does not hoist loop-invariant subexpressions out of lambda
+# bodies, and CollapseProject inlines a chained per-row column into
+# the lambda that reads it, so a norm referenced inside the
+# re-quantize transform is re-evaluated once PER ELEMENT. The norm
+# therefore enters through zip_with over array_repeat(_n, n), which
+# evaluates it once per row (the 2k-vector sf0.1 encode pass: 0.85 s
+# -> 0.23 s on 4 cores; the per-element form measured up to 64x).
 
 
 def norm_quant(df: DataFrame, col: str = "embedding") -> DataFrame:
@@ -1497,8 +1505,9 @@ def norm_quant(df: DataFrame, col: str = "embedding") -> DataFrame:
         .withColumn(
             "q2",
             F.expr(
-                "transform(_q1, x -> cast(floor(abs(cast(x as double)"
-                " / _n) * 10000000 + 0.5) as bigint)"
+                "zip_with(_q1, array_repeat(_n, size(_q1)),"
+                " (x, n) -> cast(floor(abs(cast(x as double) / n)"
+                " * 10000000 + 0.5) as bigint)"
                 " * (case when x < 0 then -1 else 1 end))"
             ),
         )
@@ -1532,13 +1541,11 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, "embeddings", sf_dir).filter(
         F.size("embedding") == EMBEDDING_DIM
     )
-    # Materialize the normalized-quantized corpus ONCE (the index
-    # build — production writes exactly this pass out as the codes
-    # source). Three consumers read it (per-dim stats, the encode
-    # pass, the query grid); without materialization each re-derives
-    # the norm-quant chain, and the posexplode below re-evaluates it
-    # per exploded ELEMENT (measured 5.7s -> 0.9s for the stats pass).
-    quant = norm_quant(emb).select("vec_id", "q2").localCheckpoint()
+    # The per-dim stats pass is a fit step: one aggregate collected as
+    # O(dim) model state. The encode pass and the query grid below
+    # recompute the norm-quant chain instead of reading a checkpoint;
+    # it is one per-row projection over the corpus.
+    quant = norm_quant(emb).select("vec_id", "q2")
     stats = (
         quant.select(F.posexplode("q2").alias("pos", "v"))
         .groupBy("pos")
@@ -1593,11 +1600,7 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("adist", -F.expr(score))
     )
-    # Top-K-per-query result: checkpoint it and release the quantized
-    # corpus blocks at exit (r9 leak fix).
-    return checkpoint_result(
-        _adc_shortlist_rerank(emb, scored, SQ_SHORTLIST), quant
-    )
+    return _adc_shortlist_rerank(emb, scored, SQ_SHORTLIST)
 
 
 # Shared normalize-then-quantize CTE block (q1t + qn): the SQL twin

@@ -40,9 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    checkpoint_result,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
     regex_word_ngrams,
 )
@@ -413,12 +410,11 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         " 16, 10) as bigint)"
     )
     sh = docs.select("source", h.alias("h")).distinct()
-    # The sketch is sources x K rows — model-state-sized, same class
-    # as the k-means centroid round-trips (similarity.py). Without
-    # materialization Spark would re-evaluate the corpus scan + md5
-    # chain once per reuse below (~10x); localCheckpoint pays the one
-    # corpus pass the sketch is supposed to cost and every pair
-    # operation after runs over sketch rows only.
+    # The sketch is one K-array per source — model-state-sized, same
+    # class as the k-means centroid round-trips (similarity.py). Both
+    # legs of the source-pair join read the same sketch exchange, which
+    # Spark reuses, so the corpus pass runs once; every pair operation
+    # after it is array-local over two K-arrays.
     sketch = (
         sh.withColumn(
             "rk",
@@ -427,47 +423,30 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .filter(F.col("rk") <= KMV_K)
-        .select("source", "h")
-        .localCheckpoint()
+        .groupBy("source")
+        .agg(F.array_sort(F.collect_list("h")).alias("hs"))
     )
-    pairs = (
-        sketch.select(F.col("source").alias("source_a"))
-        .distinct()
-        .join(
-            sketch.select(F.col("source").alias("source_b")).distinct(),
-            F.col("source_a") < F.col("source_b"),
+    sa = sketch.select(F.col("source").alias("source_a"), F.col("hs").alias("ha"))
+    sb = sketch.select(F.col("source").alias("source_b"), F.col("hs").alias("hb"))
+    # Per-pair sketch union: the K smallest hashes of ha ∪ hb, and how
+    # many of them sit in both sketches.
+    est = (
+        sa.join(sb, F.col("source_a") < F.col("source_b"))
+        .withColumn(
+            "u", F.slice(F.array_sort(F.array_union("ha", "hb")), 1, KMV_K)
         )
-    )
-    sa = sketch.select(
-        F.col("source").alias("source_a"), "h", F.lit(1).alias("in_a")
-    )
-    sb = sketch.select(
-        F.col("source").alias("source_b"), "h", F.lit(1).alias("in_b")
-    )
-    # Per-pair sketch union: every sketch row tagged with the pairs
-    # it belongs to, then per-(pair, h) membership flags.
-    u = (
-        pairs.join(sa, "source_a")
-        .select("source_a", "source_b", "h", "in_a", F.lit(None).alias("in_b"))
-        .unionByName(
-            pairs.join(sb, "source_b").select(
-                "source_a", "source_b", "h", F.lit(None).alias("in_a"), "in_b"
-            )
+        .select(
+            "source_a",
+            "source_b",
+            F.size("u").alias("ku"),
+            F.size(
+                F.filter(
+                    "u",
+                    lambda x: F.array_contains("ha", x)
+                    & F.array_contains("hb", x),
+                )
+            ).alias("matches"),
         )
-        .groupBy("source_a", "source_b", "h")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    topk = u.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("source_a", "source_b").orderBy("h")
-        ),
-    ).filter(F.col("rk") <= KMV_K)
-    est = topk.groupBy("source_a", "source_b").agg(
-        F.count(F.lit(1)).alias("ku"),
-        F.count_if(
-            F.col("in_a").isNotNull() & F.col("in_b").isNotNull()
-        ).alias("matches"),
     )
     ds = docs.select(F.expr(_FP_SPARK).alias("digest"), "source").distinct()
     per_source = ds.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
@@ -511,9 +490,7 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard_exact_ppm"),
         )
     )
-    # Source-pairs-sized result: checkpoint it and release the sketch
-    # blocks at exit (r9 leak fix).
-    return checkpoint_result(
+    return (
         est.join(exact, ["source_a", "source_b"])
         .select(
             "source_a",
@@ -526,8 +503,7 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "matches * 1000000 div ku - jaccard_exact_ppm"
             ).alias("err_ppm"),
         )
-        .orderBy("source_a", "source_b"),
-        sketch,
+        .orderBy("source_a", "source_b")
     )
 
 

@@ -49,8 +49,12 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # merge_within_rse), mm_feature_extract (empty-doc-safe oracle), the
 # four retrieval entries (corpus-statistics memo replaced the totals/
 # df aggregations and the PRF mining checkpoints), and the sixteen
-# operators whose localCheckpoint leak was fixed at the source
-# (checkpoint_result / exit unpersist — values identical, plans not);
+# operators whose localCheckpoint leak was fixed at the source (values
+# identical, plans not; those operators now build lazy plans with no
+# checkpoint at all, except the CC, PageRank, label-propagation and
+# k-core rounds, the fit steps stats_robust_mad, search_prf_expand,
+# search_mmr_diversify, BPE learn_merges and learn_block_quantizer,
+# and the dup-graph memo — functions/checkpoints.py lists them);
 # (b) the remaining 25 slots take the stalest signatures: the whole
 # r2-signed cohort (8), both r3-signed stream windows, and the first
 # 15 of the 46-entry r4 cohort (TPC-H q2-q16). The r4 remainder

@@ -18,7 +18,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# One local thread per CPU this process may run on, unless
+# SPARK_GRAFT_CPUS says otherwise.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
+    len(os.sched_getaffinity(0))
+)
 
 
 def get_session(app_name: str = "rtss_spark", cpus: str | None = None) -> SparkSession:
@@ -71,26 +75,24 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
 def sweep_persisted(spark: SparkSession) -> int:
     """Unpersist every cached/localCheckpointed RDD in the session.
 
-    Public library twin of the sweep bench.py applies between queries
-    (VERDICT r8 item 2): a handful of operators eagerly localCheckpoint
-    a twice-consumed intermediate whose blocks the RETURNED plan still
-    references — those cannot release themselves at operator exit, so a
-    long-lived session running many registry calls accumulates pinned
-    executor storage and GC pressure (measured r8: curation_funnel
-    4.6 s in-session vs 0.88 s isolated on the same host). Call this
-    between logical units of work once prior results are consumed.
+    Public library twin of the sweep bench.py applies between queries.
+    Registry operators build lazy plans, so what a sweep frees is the
+    blocks of the sites listed in functions/checkpoints.py: the CC,
+    PageRank, label-propagation and k-core rounds, and any fit-step
+    input a failed call left behind. Call it between logical units of
+    work.
 
-    Safe at any point where no held DataFrame will be re-collected:
-    every registry callable rebuilds its plan from scratch, and the
-    statistics memos (BPE merge table, retrieval corpus stats, blocking
-    quantizer) hold plain Python data, not DataFrames. NOT safe if you
-    still hold an unconsumed checkpointed result — localCheckpoint
-    truncates lineage, so its blocks are unrecoverable once released.
+    A held registry result survives a sweep and recomputes from its
+    sources, EXCEPT a PageRank, label-propagation or k-core result:
+    its plan reads a round checkpoint whose lineage is truncated, so
+    collect it before sweeping. The statistics memos (BPE merge table,
+    retrieval corpus stats, blocking quantizer) hold plain Python
+    data, not DataFrames.
 
-    Session-lived model frames (the memoized dup-graph edge set / CC
-    labels — see functions/checkpoints.py) are sweep-exempt: freeing a
-    memoized checkpoint would leave a stale handle whose next reuse
-    FAILS (truncated lineage cannot recompute).
+    The dup-graph memo (the near-dup edge set and CC labels — see
+    functions/checkpoints.py) is sweep-exempt: freeing it would leave a
+    stale handle whose next reuse FAILS (truncated lineage cannot
+    recompute).
 
     Returns the number of RDDs unpersisted (async, non-blocking).
     """

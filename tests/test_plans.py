@@ -5,6 +5,8 @@ heavy kernels don't inherit single-file parallelism)."""
 
 from __future__ import annotations
 
+import pytest
+
 from real_time_streaming_system_with_apache_kafka_spark.operators import (
     joins,
     relational,
@@ -15,6 +17,15 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _executed_plan(df) -> str:
+    """Run the frame and return the final adaptive plan that ran. A
+    subtree whose exchange Spark reused shows up once, its other
+    consumers as ``ReusedExchange``."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
 
 
 def test_filter_pushdown_and_column_pruning(spark, sf_dir):
@@ -789,13 +800,13 @@ def test_hybrid_rrf_topk_lists_prune_before_fusion(spark, sf_dir):
 def test_zonemap_stats_single_scan(spark, sf_dir):
     """The per-file stats table (min/max + all probe match counts)
     builds from ONE scan of events — one exchange on file_id — and the
-    per-probe rollups aggregate checkpointed metadata, so the corpus
-    is never re-read per probe."""
+    per-probe rollups are one aggregate over that metadata, so the
+    corpus is never re-read per probe."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import layout
 
-    df = layout.layout_zonemap_skipping(spark, sf_dir)
-    plan = _plan(df)
-    assert "Scan parquet" not in plan  # inputs are the checkpointed stats
+    plan = _executed_plan(layout.layout_zonemap_skipping(spark, sf_dir))
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
 
 
@@ -815,25 +826,20 @@ def test_hll_one_corpus_aggregate_registers_broadcast(spark, sf_dir):
     assert plan.count("Scan parquet  (") <= 2
 
 
-def test_kmv_sketch_materialized_once_pairs_sketch_sized(spark, sf_dir, monkeypatch):
-    """The KMV sketch is materialized ONCE (localCheckpoint — every
-    pair operation reads sketch rows, not the corpus); per-pair
-    top-K runs through WindowGroupLimit; the only corpus-sized scans
-    are the exact-Jaccard audit side (profile_source_overlap's
-    accepted shape)."""
+def test_kmv_sketch_materialized_once_pairs_sketch_sized(spark, sf_dir):
+    """The KMV sketch is built in ONE corpus pass (both legs of the
+    source-pair join reuse its exchange — every pair operation reads
+    sketch arrays, not the corpus); the per-source top-K runs through
+    WindowGroupLimit; the only other corpus scan is the exact-Jaccard
+    audit side (profile_source_overlap's accepted shape), whose
+    consumers share one digest exchange."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import sketches
-    from real_time_streaming_system_with_apache_kafka_spark.functions import checkpoints
 
-    # Inspect the computation plan, not the checkpointed result's
-    # `Scan ExistingRDD` (r9: results materialize + release at exit).
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", True)
-
-    plan = _plan(sketches.sketch_kmv_overlap(spark, sf_dir))
-    assert "Scan ExistingRDD" in plan  # checkpointed sketch reuse
+    plan = _executed_plan(sketches.sketch_kmv_overlap(spark, sf_dir))
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
-    # Exact audit side only: shared(a,b) + per-source totals.
-    assert plan.count("Scan parquet  (") <= 4
+    assert "ReusedExchange" in plan
+    assert plan.count("FileScan parquet") == 2  # sketch pass + exact audit
 
 
 def test_semantic_decon_bench_broadcasts_probe_fanout(spark, sf_dir):
@@ -866,45 +872,39 @@ def test_pca_projection_pass_exchange_free_and_uncheckpointed(spark, sf_dir):
     assert "Exchange" not in plan
     assert "Scan ExistingRDD" not in plan
     assert "Scan parquet" in plan
-    # Delta, not absolute: other operators' result checkpoints may be
-    # legitimately pinned in the shared test session.
+    # Delta, not absolute: iterative-round checkpoints and the
+    # dup-graph memo may be legitimately pinned in the shared session.
     assert jsc.getPersistentRDDs().size() == pinned_before
 
 
-def test_winnowing_selection_is_array_local(spark, sf_dir, monkeypatch):
+def test_winnowing_selection_is_array_local(spark, sf_dir):
     """r10: the winnowing fingerprint selection runs inside the row —
-    no Window nodes anywhere in the computation plan (the r9 shape
+    no Window nodes anywhere in the executed plan (the r9 shape
     shuffled the full gram stream by doc_id for two window passes),
     and the only Generate is the fingerprint explode plus none for
-    raw grams (grams never exist as rows)."""
+    raw grams (grams never exist as rows). The winnowed set's
+    consumers share its one fingerprint exchange, so the corpus is
+    scanned and hashed once."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import dedup
-    from real_time_streaming_system_with_apache_kafka_spark.functions import checkpoints
 
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", True)
-    plan = _plan(dedup.dedup_winnowing(spark, sf_dir))
+    plan = _executed_plan(dedup.dedup_winnowing(spark, sf_dir))
     assert "Window" not in plan
     assert "posexplode" not in plan
+    assert plan.count("FileScan parquet") == 1
+    assert "ReusedExchange" in plan
 
 
-def test_sq8_index_path_pure_codegen(spark, sf_dir, monkeypatch):
+def test_sq8_index_path_pure_codegen(spark, sf_dir):
     """Unlike PQ's argmin encode, the SQ8 INDEX path (normalize,
     quantize, encode, asymmetric score) is JVM codegen — the only
     Python stage in the whole plan is the shared exact-cosine rerank
-    kernel on shortlist rows (one distinct ArrowEvalPython node);
-    the query side broadcasts; no all-pairs fallback beyond the
-    5-query broadcast."""
-    import re
-
+    kernel on shortlist rows (one ArrowEvalPython node); the query
+    side broadcasts; no all-pairs fallback beyond the 5-query
+    broadcast."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import similarity
-    from real_time_streaming_system_with_apache_kafka_spark.functions import checkpoints
 
-    # Inspect the computation plan, not the checkpointed result's
-    # `Scan ExistingRDD` (r9: results materialize + release at exit).
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", True)
-
-    plan = _plan(similarity.sim_sq8_topk(spark, sf_dir))
-    arrow_ids = set(re.findall(r"ArrowEvalPython \((\d+)\)", plan))
-    assert len(arrow_ids) <= 1  # exact rerank kernel only
+    plan = _executed_plan(similarity.sim_sq8_topk(spark, sf_dir))
+    assert plan.count("ArrowEvalPython") == 1  # exact rerank kernel only
     assert "BatchEvalPython" not in plan
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
@@ -933,35 +933,25 @@ def test_retention_single_scan_window_denominator(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_basket_lift_pairs_explode_per_basket(spark, sf_dir, monkeypatch):
+def test_basket_lift_pairs_explode_per_basket(spark, sf_dir):
     """Pair generation is a per-basket Generate (bounded by basket
     size), never a corpus self-join of basket rows; the brand
     dimension, supports, and order total all broadcast; the
     corpus-sized tables are scanned EXACTLY ONCE (supports and the
-    order total derive from the pattern histogram, r9)."""
+    order total derive from the pattern histogram, r9, whose
+    consumers share its exchange)."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import analytics
-    from real_time_streaming_system_with_apache_kafka_spark.functions import checkpoints
 
-    # Inspect the computation plan, not the checkpointed result's
-    # `Scan ExistingRDD` (the pattern histogram + result checkpoint).
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", True)
-
-    plan = _plan(analytics.basket_pair_lift(spark, sf_dir))
+    plan = _executed_plan(analytics.basket_pair_lift(spark, sf_dir))
     assert "Generate" in plan  # per-basket pair explode
     assert plan.count("BroadcastHashJoin") >= 3
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     # The only nested-loop is the broadcast of the 1-row order total.
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
-    # NOTE the scan-once property (supports/total fold the pattern
-    # histogram instead of rescanning lineitem) is enforced by the
-    # eager pattern-histogram checkpoint, which inspection mode
-    # bypasses — in this mode every branch re-lists the scan subtree,
-    # so it can't be pinned by counting scans here. Executed shape:
-    # the returned frame is a self-contained checkpoint (below).
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", False)
-    executed = _plan(analytics.basket_pair_lift(spark, sf_dir))
-    assert "Scan parquet" not in executed  # result references nothing
+    assert plan.count("BroadcastNestedLoopJoin") <= 1
+    # One lineitem scan + the part (brand) dimension.
+    assert plan.count("FileScan parquet") == 2
+    assert "ReusedExchange" in plan
 
 
 def test_rfm_single_customer_shuffle_bounds_broadcast(spark, sf_dir):
@@ -992,22 +982,20 @@ def test_rolling_actives_contribution_explode_no_self_join(spark, sf_dir):
     assert plan.count("Scan parquet  (") <= 3  # dau + wau + mau passes
 
 
-def test_gini_two_phase_rank_no_global_sort(spark, sf_dir, monkeypatch):
+def test_gini_two_phase_rank_no_global_sort(spark, sf_dir):
     """The spend ranking is the bucketed two-phase rank: within-bucket
     windows partitioned by the value decile, never an unpartitioned
     row_number over the whole customer table (the 10-row decile
-    cumulative window is fine — it is decile-sized, not corpus-sized)."""
+    cumulative window is fine — it is decile-sized, not corpus-sized).
+    The customer aggregate's consumers share its exchange, so orders
+    is scanned once."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import analytics
-    from real_time_streaming_system_with_apache_kafka_spark.functions import checkpoints
 
-    # Inspect the computation plan, not the checkpointed result's
-    # `Scan ExistingRDD` (r9: results materialize + release at exit).
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", True)
-
-    plan = _plan(analytics.revenue_concentration_gini(spark, sf_dir))
-    assert "[bucket" in plan  # within-bucket rank window partitioned
+    plan = _executed_plan(analytics.revenue_concentration_gini(spark, sf_dir))
+    assert "hashpartitioning(bucket" in plan  # within-bucket rank window
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+    assert plan.count("FileScan parquet") == 1
 
 
 def test_substring_spans_join_free_single_explode(spark, sf_dir):
@@ -1062,28 +1050,64 @@ def test_semantic_decon_one_exchange_scores_once_per_pair(spark, sf_dir):
     # carries no embedding.
     assert plan.count("hashpartitioning(train_id") == 2
     assert "first(be" not in plan  # bench vectors never aggregated
-    # Exactly one cosine kernel evaluation site (scored pairs), plus
-    # the two signature sites — no per-collision re-score path.
-    assert plan.count("qcosine") <= 2  # tree + detail section
+    # Exactly one cosine kernel evaluation site (scored pairs) — no
+    # per-collision re-score path.
+    assert plan.count("qcosine") == 1
 
 
-def test_lm_surprise_single_tf_subtree_window_model(spark, sf_dir, monkeypatch):
-    """r9 optimization round: n1 is a window sum over the bigram
-    vocabulary (no groupBy+self-join), and tf checkpoints once — the
-    computation plan holds exactly TWO corpus explodes (tf build +
-    scoring side; the checkpoint collapses them to one at runtime) and
-    ONE join (the model tag-back). The r8 shape exploded the corpus
-    three times and joined twice."""
+def test_lm_surprise_single_tf_subtree_window_model(spark, sf_dir):
+    """The model is two window sums over the per-doc bigram counts
+    (n12 by (w1, w2), n1 by w1) sharing one w1 exchange, so the
+    executed plan holds ONE corpus scan, ONE explode, ZERO joins and
+    three exchanges (tf aggregate, model windows, doc rollup). The r9
+    shape joined the model back to a checkpointed tf; the r8 shape
+    exploded the corpus three times and joined twice."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import curation
-    from real_time_streaming_system_with_apache_kafka_spark.functions import checkpoints
 
-    monkeypatch.setattr(checkpoints, "PLAN_INSPECTION_MODE", True)
-    plan = _plan(curation.quality_lm_surprise(spark, sf_dir))
-    # formatted output repeats each node in tree + detail sections
-    assert plan.count("Generate") <= 4  # two real explodes
-    n_joins = sum(
-        plan.count(k)
-        for k in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")
+    plan = _executed_plan(curation.quality_lm_surprise(spark, sf_dir))
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("Generate") == 1
+    assert "Join" not in plan
+    assert plan.count("Window [") == 2
+    assert plan.count("Exchange hashpartitioning") == 3
+
+
+# Registry entries that build a lazy plan with no localCheckpoint.
+LAZY_ENTRIES = [
+    "basket_pair_lift",
+    "revenue_concentration_gini",
+    "quality_lm_surprise",
+    "sample_cluster_safe_split",
+    "graph_triangle_count",
+    "dedup_lsh_calibration",
+    "dedup_winnowing",
+    "layout_zonemap_skipping",
+    "mm_phash_dedup",
+    "stats_ks_drift",
+    "sim_sq8_topk",
+    "sketch_kmv_overlap",
+]
+
+
+@pytest.mark.parametrize("name", LAZY_ENTRIES)
+def test_lazy_entry_pins_nothing_and_survives_sweep(spark, sf_dir, name):
+    """Building the entry pins no executor blocks (the first build may
+    fill a session memo, the second must add nothing), and the held
+    frame still matches its oracle after a session sweep, because its
+    lineage reaches its sources."""
+    from real_time_streaming_system_with_apache_kafka_spark import registry
+    from real_time_streaming_system_with_apache_kafka_spark.session import (
+        sweep_persisted,
     )
-    assert n_joins <= 2  # one real join: scored = tf x model
-    assert "Window" in plan  # n1 = sum(n12) over (partition by w1)
+    from tests.parity import assert_parity
+
+    def pinned() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    build = registry.all_queries()[name]
+    build(spark, sf_dir)
+    before = pinned()
+    df = build(spark, sf_dir)
+    assert pinned() - before == set()
+    sweep_persisted(spark)
+    assert_parity(df, registry.all_oracles()[name], sf_dir, name=name)

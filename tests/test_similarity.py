@@ -4,6 +4,8 @@ cosine the brute-force path computed (the kernel is shared)."""
 
 from __future__ import annotations
 
+import pytest
+
 from real_time_streaming_system_with_apache_kafka_spark.operators import similarity
 
 
@@ -404,3 +406,28 @@ def test_sq8_recall_and_exact_values(spark, sf_dir):
     )
     # normalized 7dp grid: every component within +-1e7
     assert -10_000_000 <= lo <= hi <= 10_000_000
+
+
+def test_pca_gram_rejects_out_of_contract_magnitudes(spark, tmp_path):
+    """The exact int64 Gram kernel of embed_pca_power needs
+    |q|^2 < 2^62 for q in 1e-7 units (|x| below ~214.7). A component of
+    310.0 (|q| = 3.1e9, so q^2 leaves int64) must fail loudly instead
+    of wrapping."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dim = similarity.EMBEDDING_DIM
+    vecs = [[0.5] * dim for _ in range(4)]
+    vecs[1][3] = 310.0
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(4), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0, 1, 0, 1], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    with pytest.raises(Exception, match="exact int64 Gram bound"):
+        similarity.embed_pca_power(spark, str(tmp_path))

@@ -34,17 +34,6 @@ def main() -> None:
         pin_session_defaults,
     )
 
-    # Plans must show the real computation, not `Scan ExistingRDD`
-    # stubs for checkpointed intermediates (module exists from r9 on).
-    try:
-        from real_time_streaming_system_with_apache_kafka_spark.functions import (
-            checkpoints,
-        )
-
-        checkpoints.PLAN_INSPECTION_MODE = True
-    except ImportError:
-        pass
-
     spark = pin_session_defaults(get_session("rtss_capture_plans"))
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out, exist_ok=True)

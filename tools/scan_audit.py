@@ -6,19 +6,16 @@ consumer because column pruning makes the copies non-identical
 (found this way: quality_lm_surprise 3x documents,
 dedup_substring_spans 3x documents).
 
-Two modes:
-  default        — runtime truth: checkpointed intermediates explain
-                   as `Scan ExistingRDD`, so the counts are what a
-                   run actually scans;
-  --inspect      — PLAN_INSPECTION_MODE: checkpoints inlined, so the
-                   counts show what WOULD recompute without them.
+The counts come from the compiled plan before execution, so a
+subtree that Spark's exchange reuse will share at run time is listed
+once per consumer here.
 
 A `>= 3` flag is a candidate, not a verdict: sketch-vs-exact-twin
 audits and two-pass quantile shapes legitimately re-scan a pruned
 column (guide §5: cache only when recompute costs more than the
 memory pressure caching creates).
 
-Usage: python tools/scan_audit.py [--inspect] [--sf DIR]
+Usage: python tools/scan_audit.py [--sf DIR]
 """
 
 from __future__ import annotations
@@ -44,18 +41,7 @@ def main() -> None:
 
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument(
-        "--inspect",
-        action="store_true",
-        help="inline checkpointed intermediates into the audited plans",
-    )
     args = ap.parse_args()
-    if args.inspect:
-        from real_time_streaming_system_with_apache_kafka_spark.functions import (
-            checkpoints,
-        )
-
-        checkpoints.PLAN_INSPECTION_MODE = True
     sf_dir = args.sf
     spark = pin_session_defaults(get_session("rtss_scan_audit"))
     spark.sparkContext.setLogLevel("ERROR")
