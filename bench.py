@@ -21,10 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from real_time_streaming_system_with_apache_kafka_spark import registry
-from real_time_streaming_system_with_apache_kafka_spark.session import (
-    get_session,
-    sweep_persisted,
-)
+from real_time_streaming_system_with_apache_kafka_spark.session import get_session
 
 # How many of the slowest queries the compact stdout line carries;
 # sized so the line stays well under the harness's ~2000-char tail
@@ -202,20 +199,6 @@ HEADLINE = [
 ]
 
 
-def _sweep_persisted(spark) -> None:
-    """Unpersist cached/localCheckpointed RDDs between queries.
-
-    Delegates to the public library helper (r9: operators now release
-    intra-call checkpoints at exit themselves; the sweep remains as
-    hygiene for the few result-backing blocks — see
-    ``session.sweep_persisted``). RTSS_BENCH_NO_SWEEP=1 disables it,
-    the control arm of the leak experiment.
-    """
-    if os.environ.get("RTSS_BENCH_NO_SWEEP") == "1":
-        return
-    sweep_persisted(spark)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_session("rtss_bench")
@@ -281,7 +264,6 @@ def main() -> None:
             rep += 1
         times[name] = round(best, 3)
         query_noise[name] = best_steal
-        _sweep_persisted(spark)
     cpu1 = _proc_stat()
 
     m = re.search(r"sf([0-9.]+)", sf_dir)

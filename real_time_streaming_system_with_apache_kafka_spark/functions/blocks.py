@@ -52,9 +52,6 @@ from __future__ import annotations
 
 import math
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    release_checkpoint,
-)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -181,7 +178,7 @@ def learn_block_quantizer(
         emb.select("vec_id", "embedding")
         .orderBy(*_hash_order())
         .limit(k * BLOCK_TRAIN_PER_CELL)
-        .localCheckpoint()
+        .checkpoint(eager=True)
     )
     init = train.orderBy(*_hash_order()).limit(k).collect()
     cents = [list(map(float, r.embedding)) for r in init]
@@ -215,7 +212,6 @@ def learn_block_quantizer(
         )
         learned = {r.cell: list(map(float, r.centroid)) for r in rows}
         cents = [learned.get(i, cents[i]) for i in range(k)]
-    release_checkpoint(train)  # release the localCheckpoint blocks post-fit
     if memo_key is not None:
         # Evict stale fingerprints for the same corpus key (a rewritten
         # path would otherwise accumulate one dead entry per rewrite).

@@ -30,11 +30,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    protect_checkpoint,
-    release_checkpoint,
-    unprotect_and_release,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     oracle_cosine,
 )
@@ -496,16 +491,15 @@ CC_MAX_ITERS = 12  # pointer jumping: components of diameter <= 2^12
 CC_EDGE_EST = 0.5
 
 
-# Dup-graph memo (r9): the edge set and the CC labels are CORPUS
-# statistics shared by SIX operators (CC survivors, quality survivor,
-# cluster-safe split, PageRank, triangles, LPA, k-core) — production
-# materializes them as tables the graph jobs read; in-session each
-# operator was re-running the whole MinHash-LSH banding join (~2-3 s
-# of every graph entry at sf0.1). The memo keys on the corpus content
-# fingerprint and stores PROTECTED checkpoints (sweep-exempt: a swept
-# memo frame would be a stale truncated-lineage handle). Dup-graph
-# frames are near-dup-density-sized — the same model-state class as
-# the quantizer centroids, orders of magnitude under the corpus.
+# Dup-graph memo: the edge set and the CC labels are CORPUS statistics
+# shared by the graph operators (CC survivors, quality survivor,
+# cluster-safe split, PageRank, triangles, LPA, k-core), so the
+# MinHash-LSH banding join runs once per corpus per session, not once
+# per operator (~2-3 s of every graph entry at sf0.1). The memo keys on
+# the corpus content fingerprint and holds checkpointed frames, which
+# read files in the checkpoint dir: nothing is pinned in executor
+# storage and a lost executor costs nothing. Dup-graph frames are
+# near-dup-density-sized, orders of magnitude under the corpus.
 _GRAPH_CACHE: dict[tuple[int, int], dict] = {}
 
 
@@ -521,9 +515,7 @@ def _graph_state(spark: SparkSession, sf_dir: str) -> dict:
     st = _GRAPH_CACHE.get(key)
     if st is None:
         while len(_GRAPH_CACHE) >= 4:  # bench/test sessions touch <=3 SFs
-            _, old = _GRAPH_CACHE.popitem()
-            for frame in old.values():
-                unprotect_and_release(frame)
+            _GRAPH_CACHE.popitem()
         st = {}
         _GRAPH_CACHE[key] = st
     return st
@@ -535,11 +527,9 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``CC_EDGE_EST`` signature agreement, symmetrized to (src, dst).
     One definition so the graph operators can never desynchronize.
 
-    Memoized per corpus fingerprint as a PROTECTED localCheckpoint
-    (the in-session stand-in for the materialized edge table a
-    production pipeline writes once): the LSH banding join runs once
-    per corpus per session, not once per graph operator. Consumers
-    must NOT release this frame."""
+    Memoized per corpus fingerprint as a checkpoint, the edge table
+    written once per corpus per session: the LSH banding join runs
+    once, not once per graph operator."""
     st = _graph_state(spark, sf_dir)
     if "edges" not in st:
         pairs = (
@@ -547,7 +537,7 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("est_jaccard") >= CC_EDGE_EST)
             .select("doc_a", "doc_b")
         )
-        st["edges"] = protect_checkpoint(
+        st["edges"] = (
             pairs.union(
                 pairs.select(
                     F.col("doc_b").alias("doc_a"),
@@ -555,7 +545,7 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             .toDF("src", "dst")
-            .localCheckpoint(eager=True)
+            .checkpoint(eager=True)
         )
     return st["edges"]
 
@@ -573,9 +563,8 @@ def dedup_cc_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log diameter) rounds, not O(diameter). Per round: one join to
     pull neighbor labels, one self-join to jump ``label -> label's
     label``, and a scalar count for the convergence test — the ONLY
-    thing that ever reaches the driver. ``localCheckpoint`` truncates
-    the growing lineage each round (at scale: checkpoint to durable
-    storage instead).
+    thing that ever reaches the driver. A checkpoint truncates the
+    growing lineage each round.
     """
     docs = load(spark, "documents", sf_dir)
     labels = _cc_labels(spark, sf_dir, docs)
@@ -599,10 +588,9 @@ def _cc_labels(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     iterating over 100 TB twelve times and iterating over the dup
     graph twelve times.
 
-    The FINAL label frame is memoized per corpus fingerprint as a
-    protected checkpoint (three operators consume it: CC survivors,
-    quality survivor via dedup_cc_survivors, cluster-safe split) —
-    intermediate rounds still release as the next round materializes."""
+    The FINAL label frame is memoized per corpus fingerprint (three
+    operators consume it: CC survivors, quality survivor via
+    dedup_cc_survivors, cluster-safe split)."""
     st = _graph_state(spark, sf_dir)
     if "cc_labels" in st:
         final = st["cc_labels"].select("doc_id", "label")
@@ -613,11 +601,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     verts = edges.select(F.col("src").alias("doc_id")).distinct()
     labels = verts.select(
         "doc_id", F.col("doc_id").alias("label")
-    ).localCheckpoint(eager=True)
-    # Round k's checkpoint is released as soon as round k+1
-    # materializes (r9 leak fix): at most ONE round of labels stays
-    # pinned, and only the final round's blocks back the returned plan.
-    cur_ckpt = labels
+    ).checkpoint(eager=True)
     for _ in range(CC_MAX_ITERS):
         nbr_min = (
             edges.join(
@@ -653,15 +637,13 @@ def _cc_labels(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
                 F.col("s.old_label").alias("old_label"),
                 F.coalesce("l_label", "s.label").alias("label"),
             )
-            .localCheckpoint(eager=True)
+            .checkpoint(eager=True)
         )
         changed = jumped.filter(F.col("label") != F.col("old_label")).count()
-        release_checkpoint(cur_ckpt)  # prior round: jumped is materialized
-        cur_ckpt = jumped
         labels = jumped.select("doc_id", "label")
         if changed == 0:
             break
-    st["cc_labels"] = protect_checkpoint(cur_ckpt)
+    st["cc_labels"] = labels
     # Singletons rejoin the spine with label = their own id.
     return docs.select("doc_id").join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("label")
@@ -842,7 +824,7 @@ def graph_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first iterative shape (the Pregel-on-DataFrames pattern):
     per round ONE join (scores to edges) and ONE aggregation (sum of
-    contributions per destination), with ``localCheckpoint`` truncating
+    contributions per destination), with a checkpoint truncating
     lineage; a FIXED iteration count so nothing but the final top-100
     ever reaches the driver. Per-edge contributions are quantized to
     integer 1e-9 units (floor over bit-identical doubles — engine-safe,
@@ -855,7 +837,6 @@ def graph_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _dup_edges(spark, sf_dir)
     nodes = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     score = nodes.select(F.col("src").alias("doc_id"), "deg", F.lit(1.0).alias("score"))
-    prev_ckpt = None
     for _iter in range(PR_ITERS):
         contribs = edges.join(
             score.select(F.col("doc_id").alias("src"), "deg", "score"), "src"
@@ -890,11 +871,7 @@ def graph_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             # that two rounds of (join + agg) don't yet need truncated;
             # every-2 keeps plans bounded at the same asymptotic cost
             # (measured ~0.6 s/round saved at sf0.1).
-            score = score.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)  # score is materialized
-            prev_ckpt = score
-    # The top-100 plan reads the last round's checkpoint.
+            score = score.checkpoint(eager=True)
     return (
         score.select("doc_id", F.col("deg").alias("n_neighbors"), "score")
         .orderBy(F.col("score").desc(), "doc_id")
@@ -1470,7 +1447,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     same as graph_pagerank_dupgraph): per round ONE join (labels to
     edges), ONE label census aggregation, ONE argmax window over
     census rows (bounded by the LSH-candidate edge count, never
-    corpus-quadratic); fixed LPA_ITERS rounds, localCheckpoint
+    corpus-quadratic); fixed LPA_ITERS rounds, a checkpoint
     truncating lineage; nothing reaches the driver. The DuckDB oracle
     unrolls the identical rounds as chained CTEs."""
     edges = _dup_edges(spark, sf_dir)
@@ -1492,9 +1469,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             census.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("doc_id", "lbl")
-            .localCheckpoint(eager=False)
+            .checkpoint(eager=True)
         )
-    # The result plan reads the last round's label checkpoint.
     return labels.select("doc_id", F.col("lbl").alias("community")).orderBy(
         "doc_id"
     )
@@ -1696,8 +1672,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("peeled_round"))
             .alias("peeled_round"),
         )
-        alive = survivors.localCheckpoint(eager=False)
-    # The result plan reads every round's survivor checkpoint.
+        alive = survivors.checkpoint(eager=True)
     return result.select(
         "doc_id",
         "peeled_round",

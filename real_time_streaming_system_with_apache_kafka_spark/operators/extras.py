@@ -12,9 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    release_checkpoint,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.exact import dsum, oracle_dsum
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import (
     load,
@@ -525,7 +522,7 @@ def stats_robust_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count), so the histogram is a small distributed frame, and —
     key fusion — the DEVIATION histogram |cents - med| is a pure
     function of it, so the MAD never re-reads the fact. Three tiny
-    follow-up jobs run against the cached histogram:
+    follow-up jobs run against the checkpointed histogram:
       1. coarse fixed-width bin counts (bucket = value div 2^16) ->
          covering bucket + within-bucket rank per group (driver walk
          over <=170 bins);
@@ -559,7 +556,7 @@ def stats_robust_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .checkpoint(eager=True)
     )
 
     def rank_walk(h: dict, k: int):
@@ -614,14 +611,13 @@ def stats_robust_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.setdefault(r["l_returnflag"], {})[r["v"]] = r["c"]
         return out
 
-    # Job 1 (the only fact scan materializes here): coarse cents bins.
+    # Job 1 (the checkpoint above was the only fact scan): coarse cents bins.
     bins1 = coarse(hist, "cents")
     out_schema = (
         "l_returnflag string, n bigint, med_cents bigint, "
         "mad_cents bigint, n_outliers bigint, outlier_ppm bigint"
     )
     if not bins1:  # empty fact table: no groups, empty result
-        release_checkpoint(hist)
         return spark.createDataFrame([], out_schema)
     n_by_g = {g: sum(h.values()) for g, h in bins1.items()}
     k_by_g = {g: (n + 1) // 2 for g, n in n_by_g.items()}
@@ -671,10 +667,6 @@ def stats_robust_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (g, n, med[g], mad, n_out, n_out * 1_000_000 // n)
         )
-    # The histogram was consumed entirely by the driver-side rank
-    # walks above; the returned frame is driver-created, so release
-    # the checkpoint blocks at exit (r9 leak fix).
-    release_checkpoint(hist)
     return spark.createDataFrame(rows, out_schema).orderBy("l_returnflag")
 
 

@@ -38,9 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    release_checkpoint,
-)
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     cosine,
     oracle_cosine,
@@ -380,10 +377,8 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     live in the per-corpus-fingerprint memo next to N/W/probe-df:
     computed once per session per corpus, with pass 1 + mining run as
     driver-collected bounded values (queries x E rows — never
-    corpus-sized). This replaced the r8 design's two eager
-    localCheckpoints: the mined-term table no longer exists as a
-    checkpointed DataFrame pinning executor storage for the session
-    (VERDICT r8 item 2), and a memo hit runs ONLY pass 2 — the
+    corpus-sized). The mined-term table is not held as a DataFrame
+    for the session, and a memo hit runs ONLY pass 2 — the
     fingerprint scan plus one tf scan."""
     docs = load_rebalanced(spark, "documents", sf_dir)
     st = _corpus_stats(docs)
@@ -408,17 +403,15 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Mine expansion terms from the feedback docs: new terms only,
         # rarity-weighted exactly. cand_tf is referenced twice
-        # (term-set broadcast + scoring join) — checkpointed for the
-        # mining job, RELEASED as soon as the mined terms are
-        # collected (the memo stores plain strings/ints, so nothing
-        # pins executor storage past this call).
+        # (term-set broadcast + scoring join), so it is checkpointed
+        # for the mining job; the memo stores plain strings/ints.
         cand_tf = (
             F.broadcast(fb)
             .join(toks.select("doc_id", "term"), "doc_id")
             .join(qterms, ["query_id", "term"], "left_anti")
             .groupBy("query_id", "term")
             .agg(F.count(F.lit(1)).alias("tf"))
-            .localCheckpoint(eager=True)
+            .checkpoint(eager=True)
         )
         # Document frequency ONLY for the candidate terms: the
         # broadcast semi-prune reaches the token stream map-side, so
@@ -447,7 +440,6 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("mrk") <= PRF_EXPAND_TERMS)
             .select("query_id", "term", "df")
         ).collect()  # bounded: queries x PRF_EXPAND_TERMS rows
-        release_checkpoint(cand_tf)
         st["prf_mined"] = sorted(
             (int(r["query_id"]), r["term"]) for r in mined_rows
         )
@@ -629,8 +621,7 @@ def search_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "rel", "ne")
         # Computed once, consumed twice (candidates + pairwise sims):
         # checkpoint so the cosine retrieval subtree runs once.
-        # Released before return — see the result checkpoint below.
-        .localCheckpoint(eager=True)
+        .checkpoint(eager=True)
     )
     cand = cand_full.select("query_id", "doc_id", "rel")
     a = cand_full.select(
@@ -650,14 +641,7 @@ def search_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("query_id").alias("query_id"), "a", "b", "sim"
         )
     )
-    # Materialize the result (queries x MMR_SELECT rows — tiny) and
-    # RELEASE cand_full's checkpoint blocks before returning: the r8
-    # design left the K x queries x dim candidate frame pinned in
-    # executor storage for the session lifetime (VERDICT r8 item 2 —
-    # the localCheckpoint leak, fixed at the source). The returned
-    # frame is backed by its own one-block checkpoint, so nothing
-    # references cand_full after this line.
-    res = (
+    return (
         cand.groupBy("query_id")
         .cogroup(sims.groupBy("query_id"))
         .applyInPandas(
@@ -666,10 +650,7 @@ def search_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rel double, mmr_score double",
         )
         .orderBy("query_id", "sel_rank")
-        .localCheckpoint(eager=True)
     )
-    release_checkpoint(cand_full)
-    return res
 
 
 def _make_mmr_kernel(n_select: int, rel_coef: int, div_coef: int):

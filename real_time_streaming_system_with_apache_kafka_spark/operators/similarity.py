@@ -287,7 +287,7 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is then a driver-side exact-integer matvec u = G v (u_d =
     sum_i c_i*y_id = sum_e G_de*v_e — identical, term for term, to the
     per-round corpus aggregation this replaces; r9 ran one Spark job +
-    collect per round against a localCheckpointed centered matrix,
+    collect per round against a checkpointed centered matrix,
     ~6 driver-coordinated jobs of fixed overhead each at small SF).
     Pass 2 emits the projection directly from the raw scan:
     y_i . v = N*(x_i . v) - S . v, exact in decimal(38,0).

@@ -14,9 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-    release_checkpoint,
-)
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import (
     load,
     load_rebalanced,
@@ -289,7 +286,7 @@ def vocab_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vocab_bpe_pair_stats``; this operator is the training loop.
 
     Scale shape: the corpus is touched ONCE (token explode with
-    map-side combine into word frequencies, localCheckpointed);
+    map-side combine into word frequencies, checkpointed);
     every round after runs on the VOCABULARY (sublinear in corpus
     size) and returns exactly one (pair, weight) row to the driver —
     O(1) model state per round, the same driver-traffic contract as
@@ -324,7 +321,7 @@ def _corpus_vocab(docs: DataFrame, checkpoint: bool = True) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    return vocab.localCheckpoint(eager=True) if checkpoint else vocab
+    return vocab.checkpoint(eager=True) if checkpoint else vocab
 
 
 def _adjacent_pairs(vocab: DataFrame) -> DataFrame:
@@ -390,11 +387,7 @@ def _learn_merges_for_docs(
     if key not in _MERGE_CACHE:
         if len(_MERGE_CACHE) >= 8:  # bench/test sessions touch <=3 SFs
             _MERGE_CACHE.clear()
-        vocab = _corpus_vocab(docs)
-        try:
-            _MERGE_CACHE[key] = _learn_merges_raw(vocab, rounds)
-        finally:
-            release_checkpoint(vocab)  # release the localCheckpoint blocks
+        _MERGE_CACHE[key] = _learn_merges_raw(_corpus_vocab(docs), rounds)
     return _MERGE_CACHE[key]
 
 

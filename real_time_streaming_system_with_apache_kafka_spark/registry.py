@@ -16,72 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # The external correctness harness certifies the FIRST 50 ``queries()``
-# entries per round (dict insertion order). Rounds 1-2 signed the
-# SURVEY §2 relational core; round 3 the LLM-data-pipeline suite;
-# round 4 the TPC-H batch (q2-q22) + datamix / skew / layout / extras;
-# round 5 the dedup-extension / dup-graph / BPE / similarity-remainder
-# / pipeline-analytics batch. Round 6 rotates in 47 more of the
-# never-driver-signed entries: the 11 golden-fixture oracles (the 10
-# dash_* frames + src1_trade_generator — src1 upgrades its r1-r4
-# rows-only signature to a hash signature), retrieval, sketches,
-# sampling (incl. the r5-added sample_cluster_safe_split), mix,
-# layout, view_incremental_merge, the pack/export dataloader pair,
-# and 11 of the 18 curation remainder. The three §2 sentinels stay
-# pinned so the core never goes a round unsigned. Entries NOT listed
-# keep module order after the priority block and stay covered every
-# round by the local parity suite (tests/test_oracle_parity.py) and
-# the representation audit (tools/canon_check.py — run it before
-# rotating anything in).
-#
-# Round-7 closed the certification ledger at 243/244 distinct-signed:
-# 241 hash-green at least once, 2 rows-only witnessed (the approx
-# sketches), and mm_feature_extract CRASHED the driver's canonicalizer
-# (array<double> output -> unhashable ndarray; CORRECTNESS_r07
-# spark_rows: null) — the one entry with zero driver evidence.
-#
-# Round-8 rotation signed all 50 of its rows (CORRECTNESS_r08: 50/50
-# hash-green, zero err — the ledger closed at 244/244 cumulatively
-# distinct-signed).
-#
-# Round-9 rotation: (a) every entry whose PLAN or SCHEMA changed this
-# round gets a fresh signature — approx_hll_partials (merge tolerance
-# re-derived from the estimator RSE; boolean column renamed
-# merge_within_rse), mm_feature_extract (empty-doc-safe oracle), the
-# four retrieval entries (corpus-statistics memo replaced the totals/
-# df aggregations and the PRF mining checkpoints), and the sixteen
-# operators whose localCheckpoint leak was fixed at the source (values
-# identical, plans not; those operators now build lazy plans with no
-# checkpoint at all, except the CC, PageRank, label-propagation and
-# k-core rounds, the fit steps stats_robust_mad, search_prf_expand,
-# search_mmr_diversify, BPE learn_merges and learn_block_quantizer,
-# and the dup-graph memo — functions/checkpoints.py lists them);
-# (b) the remaining 25 slots take the stalest signatures: the whole
-# r2-signed cohort (8), both r3-signed stream windows, and the first
-# 15 of the 46-entry r4 cohort (TPC-H q2-q16). The r4 remainder
-# (q17-q22 + datamix/skew/layout/extras, 31 entries) is the r10
-# cohort — registry history above tracks it.
-#
-# r9 restart addendum: the extra-session perf work changed three more
-# plans — basket_pair_lift (pattern-histogram-derived supports, one
-# corpus pass), dedup_winnowing (checkpointed winnowed set + hub
-# anti-join), and metrics_bootstrap_ci (whose DRAWS changed: boot_v2
-# packs 4 replicas per md5, so its values and oracle moved together —
-# the one entry whose fresh signature is mandatory, not hygiene).
-# They took the last three r9 slots; the r9 session-3 rewrites
-# (dedup_substring_spans, decontaminate_semantic, quality_lm_surprise)
-# displaced q11-q13 into the r10 cohort.
-#
-# Round-10 rotation (optimization round 2): (a) every entry whose
-# PLAN changed this round gets a fresh signature — embed_pca_power
-# (per-round corpus jobs -> one exact Gram pass + driver matvecs),
-# decontaminate_semantic (score-once-per-pair set dedup),
-# dedup_winnowing (array-local fingerprint selection) — values
-# verified identical against the full 244-oracle parity run each
-# batch; (b) the r4 remainder takes its long-scheduled turn — TPC-H
-# q11-q22 + the datamix/skew/layout/extras cohort, 37 entries, the
-# stalest signatures on the ledger (signed r4, never since); (c) the
-# 7 remaining slots start on the r5-signed cohort (alphabetical
-# order, next 24 are the r11 cohort if rotation continues).
+# entries (dict insertion order): this priority block, then every other
+# entry in module order. The three §2 sentinels stay pinned at the top,
+# so the relational core is certified every time. Entries outside the
+# window stay covered by the local parity suite
+# (tests/test_oracle_parity.py). Run the representation audit
+# (tools/canon_check.py) before rotating any entry into the window.
 _PRIORITY: list[str] = [
     # §2 sentinels — pinned every round.
     "w1_minute_activity",

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 # One local thread per CPU this process may run on, unless
@@ -69,42 +70,28 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
     # future Spark makes the conf static): fail loudly, not with a
     # hash mismatch three layers up.
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    # The iterative rounds and fit steps truncate lineage with
+    # checkpoint(), which needs a checkpoint dir. Default to one under
+    # the context's SparkFiles root, which Spark deletes when the context
+    # stops; a dir the caller already set is left alone.
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(
+            os.path.join(SparkFiles.getRootDirectory(), "checkpoints")
+        )
     return spark
 
 
 def sweep_persisted(spark: SparkSession) -> int:
-    """Unpersist every cached/localCheckpointed RDD in the session.
+    """Unpersist every cached RDD in the session.
 
-    Public library twin of the sweep bench.py applies between queries.
-    Registry operators build lazy plans, so what a sweep frees is the
-    blocks of the sites listed in functions/checkpoints.py: the CC,
-    PageRank, label-propagation and k-core rounds, and any fit-step
-    input a failed call left behind. Call it between logical units of
-    work.
-
-    A held registry result survives a sweep and recomputes from its
-    sources, EXCEPT a PageRank, label-propagation or k-core result:
-    its plan reads a round checkpoint whose lineage is truncated, so
-    collect it before sweeping. The statistics memos (BPE merge table,
-    retrieval corpus stats, blocking quantizer) hold plain Python
-    data, not DataFrames.
-
-    The dup-graph memo (the near-dup edge set and CC labels — see
-    functions/checkpoints.py) is sweep-exempt: freeing it would leave a
-    stale handle whose next reuse FAILS (truncated lineage cannot
-    recompute).
+    Call it between logical units of work. Registry results read their
+    sources or checkpoint files, never cached blocks, so a held result
+    still collects after a sweep.
 
     Returns the number of RDDs unpersisted (async, non-blocking).
     """
-    from real_time_streaming_system_with_apache_kafka_spark.functions.checkpoints import (
-        protected_rdd_ids,
-    )
-
-    keep = protected_rdd_ids()
-    n = 0
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        if rdd.id() in keep:
-            continue
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    for rdd in rdds:
         rdd.unpersist(False)
-        n += 1
-    return n
+    return len(rdds)

@@ -3,6 +3,8 @@
 - The correctness driver hosts its OWN SparkSession with arbitrary
   confs (possibly a non-UTC host timezone); the table loader must
   re-pin the session so hashes can't silently flip (VERDICT r1 #6).
+- The loader gives a context without a checkpoint dir one under the
+  context's own SparkFiles root, and leaves a caller's dir alone.
 - Kafka end-to-end stays gated on connector+broker availability
   (VERDICT r1 #5): the test body is real and runs the moment the
   environment ships ``spark-sql-kafka-0-10`` and a broker at
@@ -12,11 +14,15 @@
 
 from __future__ import annotations
 
+import os
 import socket
+from urllib.parse import urlparse
 
 import pytest
+from pyspark import SparkFiles
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.session import pin_session_defaults
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load
 
 
@@ -40,6 +46,35 @@ def test_non_utc_driver_session_is_repinned(spark, sf_dir):
     )
     assert alien.conf.get("spark.sql.session.timeZone") == "UTC"
     assert alien_row == utc_row
+
+
+def _checkpoint_path(spark) -> str:
+    return os.path.realpath(urlparse(spark.sparkContext.getCheckpointDir()).path)
+
+
+def test_load_sets_checkpoint_dir_under_spark_files_root(spark, sf_dir):
+    """The default checkpoint dir lies under the SparkFiles root, which
+    Spark deletes when the context stops."""
+    load(spark, "orders", sf_dir)
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    assert _checkpoint_path(spark).startswith(root + os.sep)
+
+
+def test_caller_checkpoint_dir_survives_pin(spark, sf_dir, tmp_path):
+    """A checkpoint dir set on the context beforehand is a deployment
+    setting: pinning the session defaults leaves it unchanged."""
+    sc = spark.sparkContext
+    load(spark, "orders", sf_dir)
+    own = os.path.dirname(_checkpoint_path(spark))
+    try:
+        sc.setCheckpointDir(str(tmp_path))
+        preset = sc.getCheckpointDir()
+        pin_session_defaults(spark)
+        assert sc.getCheckpointDir() == preset
+    finally:
+        # setCheckpointDir adds a fresh subdirectory, so this restores
+        # the session's root, not the exact subdirectory.
+        sc.setCheckpointDir(own)
 
 
 def _kafka_available() -> bool:

@@ -1,5 +1,6 @@
 """The local twin of the driver's t2 correctness gate: every registered
-query with an oracle must match DuckDB exactly at sf0.01."""
+query with an oracle must match DuckDB exactly at sf0.01, and no entry
+may leave executor blocks pinned."""
 
 from __future__ import annotations
 
@@ -14,8 +15,13 @@ _ORACLES = registry.all_oracles()
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_query_matches_oracle(spark, sf_dir, name):
+    def pinned() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = pinned()
     df = _QUERIES[name](spark, sf_dir)
     assert_parity(df, _ORACLES[name], sf_dir, name=name)
+    assert pinned() - before == set(), f"{name} left persistent RDDs"
 
 
 def test_every_query_has_an_oracle():

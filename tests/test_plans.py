@@ -872,8 +872,6 @@ def test_pca_projection_pass_exchange_free_and_uncheckpointed(spark, sf_dir):
     assert "Exchange" not in plan
     assert "Scan ExistingRDD" not in plan
     assert "Scan parquet" in plan
-    # Delta, not absolute: iterative-round checkpoints and the
-    # dup-graph memo may be legitimately pinned in the shared session.
     assert jsc.getPersistentRDDs().size() == pinned_before
 
 
@@ -1072,8 +1070,9 @@ def test_lm_surprise_single_tf_subtree_window_model(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 3
 
 
-# Registry entries that build a lazy plan with no localCheckpoint.
-LAZY_ENTRIES = [
+# Registry entries whose held result must survive a session sweep: the
+# lazy plans, and the entries that truncate lineage with checkpoint().
+SWEEP_SURVIVING_ENTRIES = [
     "basket_pair_lift",
     "revenue_concentration_gini",
     "quality_lm_surprise",
@@ -1086,15 +1085,24 @@ LAZY_ENTRIES = [
     "stats_ks_drift",
     "sim_sq8_topk",
     "sketch_kmv_overlap",
+    "dedup_cc_survivors",
+    "graph_pagerank_dupgraph",
+    "graph_label_propagation",
+    "graph_kcore",
+    "stats_robust_mad",
+    "search_prf_expand",
+    "search_mmr_diversify",
+    "vocab_bpe_learn_merges",
+    "sim_ivf_kmeans_topk",
 ]
 
 
-@pytest.mark.parametrize("name", LAZY_ENTRIES)
+@pytest.mark.parametrize("name", SWEEP_SURVIVING_ENTRIES)
 def test_lazy_entry_pins_nothing_and_survives_sweep(spark, sf_dir, name):
     """Building the entry pins no executor blocks (the first build may
     fill a session memo, the second must add nothing), and the held
     frame still matches its oracle after a session sweep, because its
-    lineage reaches its sources."""
+    lineage reaches its sources or checkpoint files."""
     from real_time_streaming_system_with_apache_kafka_spark import registry
     from real_time_streaming_system_with_apache_kafka_spark.session import (
         sweep_persisted,

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from real_time_streaming_system_with_apache_kafka_spark import registry  # noqa: E402
 from real_time_streaming_system_with_apache_kafka_spark.session import get_session  # noqa: E402
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load  # noqa: E402
-from bench import HEADLINE, _proc_stat, _steal_summary, _sweep_persisted  # noqa: E402
+from bench import HEADLINE, _proc_stat, _steal_summary  # noqa: E402
 
 SRC_SF = "/root/testdata/sf0.1"
 STRIDE = 100_000_000  # far above any base key
@@ -232,7 +232,6 @@ def run_bench(spark, sf_dir: str) -> dict[str, float]:
             queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.monotonic() - t0)
         times[name] = round(best, 3)
-        _sweep_persisted(spark)
         print(f"  {name}: {times[name]}s", flush=True)
     return times
 
