@@ -25,7 +25,7 @@ from real_time_streaming_system_with_apache_kafka_spark.session import get_sessi
 
 # How many of the slowest queries the compact stdout line carries;
 # sized so the line stays well under the harness's ~2000-char tail
-# capture (the full table goes to BENCH_LOCAL_r<N>.json).
+# capture (the full table goes to .bench/BENCH_LOCAL.json).
 _COMPACT_TOP_QUERIES = 12
 
 HEADLINE = [
@@ -305,33 +305,13 @@ def main() -> None:
     # The external harness captures only a TAIL of stdout (~2000
     # chars): BENCH_r04/r05 both came back parsed:null because the
     # full 108-query artifact is one ~5 KB JSON line. So: write the
-    # FULL artifact to a committed BENCH_LOCAL_r<N>.json, and print a
-    # compact line (total, host noise, the slowest queries, top
-    # regressions) that fits the tail capture whole.
+    # FULL artifact to .bench/BENCH_LOCAL.json (ignored by git, so a
+    # run leaves the checkout clean), and print a compact line (total,
+    # host noise, the slowest queries, top regressions) that fits the
+    # tail capture whole.
+    local_name = os.path.join(".bench", "BENCH_LOCAL.json")
     here = os.path.dirname(os.path.abspath(__file__))
-    # Current round = 1 + latest DRIVER-written round. The driver
-    # writes BENCH_r<N> and CORRECTNESS_r<N> together at end-of-round,
-    # so scan BOTH families: if one ever fails to land, the other
-    # still advances the counter instead of silently overwriting the
-    # prior round's committed BENCH_LOCAL artifact. A same-round
-    # re-run refreshing its own BENCH_LOCAL_r<N> stays intended
-    # behavior (and records itself in the "vs" delta field).
-    def _rounds(pattern: str) -> int:
-        return max(
-            (
-                int(re.search(r"\d+", f).group())
-                for f in os.listdir(here)
-                if re.fullmatch(pattern, f)
-            ),
-            default=0,
-        )
-
-    nxt = max(
-        1 + _rounds(r"BENCH_r\d+\.json"),
-        1 + _rounds(r"CORRECTNESS_r\d+\.json"),
-        _rounds(r"BENCH_LOCAL_r\d+\.json"),
-    )
-    local_name = f"BENCH_LOCAL_r{nxt}.json"
+    os.makedirs(os.path.join(here, ".bench"), exist_ok=True)
     with open(os.path.join(here, local_name), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
 

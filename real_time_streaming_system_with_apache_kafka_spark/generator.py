@@ -4,8 +4,11 @@ Re-expresses the reference's trade generator semantics
 (reference producer.py:11-128: weighted categoricals producer.py:39,
 per-class quantity/price ranges producer.py:62-76, derived
 notional/fees producer.py:78-84, T+N settlement producer.py:89-97,
-priority/STP rules producer.py:100-105) as pure Spark column
-expressions over ``spark.range(n)``.
+priority/STP rules producer.py:100-105) as Spark SQL expressions
+over ``spark.range(n)``. The constant tables below become literal
+arrays and ``CASE`` branches inside those expressions, and the columns
+are built in one ``selectExpr`` projection per dependency level, so a
+plan costs a few Py4J calls however many options the tables hold.
 
 Two deliberate departures from the reference, both scale-driven:
 
@@ -15,7 +18,7 @@ Two deliberate departures from the reference, both scale-driven:
    task order, or retries. That's what makes the generator safe on a
    1000-executor cluster (speculative re-execution produces identical
    rows) and makes golden tests possible.
-2. **Declarative.** One ``range(n)`` + column expressions = a lazy plan
+2. **Declarative.** One ``range(n)`` + SQL expressions = a lazy plan
    Catalyst can parallelize arbitrarily; generating 100 TB of synthetic
    trades is embarrassingly parallel with zero Python in the loop
    (whole-stage codegen end to end).
@@ -26,8 +29,9 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from real_time_streaming_system_with_apache_kafka_spark.schemas import TRADE_SCHEMA
 
@@ -85,49 +89,40 @@ ANALYSTS = [
 _MASK = 1 << 30
 
 
-def _u01(seed: int, tag: str) -> Column:
-    """Uniform [0,1) derived from (row id, seed, tag) — row-deterministic
-    regardless of partitioning, unlike ``F.rand(seed)``."""
-    return F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit(tag)), F.lit(_MASK)) / _MASK
+def _double(x: float) -> str:
+    """A DOUBLE constant: a bare ``50.0`` in Spark SQL is a DECIMAL."""
+    return f"CAST({x!r} AS DOUBLE)"
 
 
-def _choice(options: list[str], seed: int, tag: str) -> Column:
-    arr = F.array(*[F.lit(o) for o in options])
-    return F.element_at(arr, (F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit(tag)), F.lit(len(options))) + 1).cast("int"))
+def _hash(seed: int, tag: str) -> str:
+    """Hash of (row id, seed, tag): row-deterministic regardless of
+    partitioning, unlike ``rand(seed)``."""
+    return f"xxhash64(id, {seed}, '{tag}')"
 
 
-def _weighted_choice(options: list[str], weights: list[float], seed: int, tag: str) -> Column:
-    """Cumulative-weight when-ladder (producer.py:58 random.choices)."""
-    u = _u01(seed, tag)
-    cutoffs: list[tuple[float, str]] = []
-    cum = 0.0
+def _uniform(seed: int, tag: str) -> str:
+    """Uniform [0,1) derived from (row id, seed, tag)."""
+    return f"(pmod({_hash(seed, tag)}, {_MASK}) / {_MASK})"
+
+
+def _pick(options: list[str], seed: int, tag: str) -> str:
+    arr = ", ".join(f"'{o}'" for o in options)
+    return f"element_at(array({arr}), CAST(pmod({_hash(seed, tag)}, {len(options)}) + 1 AS INT))"
+
+
+def _weighted_pick(options: list[str], weights: list[float], seed: int, tag: str) -> str:
+    """Cumulative-weight ladder (producer.py:58 random.choices)."""
+    u, cum, whens = _uniform(seed, tag), 0.0, []
     for opt, w in zip(options[:-1], weights[:-1]):
         cum += w
-        cutoffs.append((cum, opt))
-    result = F.lit(options[-1])
-    for cum, opt in reversed(cutoffs):
-        result = F.when(u < cum, F.lit(opt)).otherwise(result)
-    return result
+        whens.append(f"WHEN {u} < {_double(cum)} THEN '{opt}'")
+    return f"CASE {' '.join(whens)} ELSE '{options[-1]}' END"
 
 
-def _randint(seed: int, tag: str) -> Column:
-    """Per-class integer uniform in [lo, hi] (producer.py randint)."""
-    u = _u01(seed, tag)
-    result = F.lit(None)
-    for cls, (lo, hi, *_rest) in RANGES.items():
-        val = (F.floor(u * (hi - lo + 1)) + lo).cast("long")
-        result = F.when(F.col("asset_class") == cls, val).otherwise(result)
-    return result
-
-
-def _randprice(seed: int, tag: str) -> Column:
-    """Per-class uniform price rounded to the class's decimal places."""
-    u = _u01(seed, tag)
-    result = F.lit(None)
-    for cls, (_, _, lo, hi, dp) in RANGES.items():
-        val = F.round(F.lit(lo) + u * (hi - lo), dp)
-        result = F.when(F.col("asset_class") == cls, val).otherwise(result)
-    return result
+def _per_class(branches: dict[str, str]) -> str:
+    """One ``CASE asset_class``; a class without a branch yields NULL."""
+    whens = " ".join(f"WHEN '{cls}' THEN {sql}" for cls, sql in branches.items())
+    return f"CASE asset_class {whens} END"
 
 
 def trades(
@@ -159,85 +154,73 @@ def decorate_ids(
     derives from (id, seed) alone, so the SAME id produces the SAME
     trade in batch and streaming — the property the stream/batch
     equivalence tests and the soak's redelivery injection rely on."""
-    df = df.withColumn("asset_class", _choice(ASSET_CLASSES, seed, "class"))
-
-    # Per-class instrument pick (producer.py:55).
-    instrument = F.lit(None)
-    for cls, ticks in INSTRUMENTS.items():
-        instrument = F.when(
-            F.col("asset_class") == cls, _choice(ticks, seed, f"instr_{cls}")
-        ).otherwise(instrument)
-
-    quantity = _randint(seed, "qty")
-    price = _randprice(seed, "price")
-
-    df = (
-        df.withColumn("instrument", instrument)
-        .withColumn("side", _choice(SIDES, seed, "side"))
-        .withColumn("counterparty", _choice(COUNTERPARTIES, seed, "cpty"))
-        .withColumn("status", _weighted_choice(STATUSES, STATUS_WEIGHTS, seed, "status"))
-        .withColumn("settlement_venue", _choice(VENUES, seed, "venue"))
-        .withColumn("quantity", quantity)
-        .withColumn("price", price)
-    )
-
-    notional = F.round(F.col("quantity") * F.col("price"), 2)
-    df = df.withColumn("notional_value", notional)
-
-    def fee(tag: str, lo: float, hi: float) -> Column:
-        return F.round(F.col("notional_value") * (F.lit(lo) + _u01(seed, tag) * (hi - lo)), 2)
-
-    df = (
-        df.withColumn("brokerage_fee", fee("fee_brk", 0.0001, 0.0015))  # producer.py:81
-        .withColumn("clearing_fee", fee("fee_clr", 0.00005, 0.0003))  # producer.py:82
-        .withColumn("exchange_fee", fee("fee_exc", 0.00003, 0.0002))  # producer.py:83
-    )
-    df = df.withColumn(
-        "total_fees",
-        F.round(F.col("brokerage_fee") + F.col("clearing_fee") + F.col("exchange_fee"), 2),
-    )
-
-    days_back = F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit("tdate")), F.lit(4)).cast("int")
-    df = df.withColumn("trade_date", F.date_sub(F.lit(base_date), days_back))
-
-    settle = F.lit(None)
-    for cls, n in SETTLEMENT_DAYS.items():
-        settle = F.when(F.col("asset_class") == cls, F.date_add(F.col("trade_date"), n)).otherwise(settle)
-    df = df.withColumn("settlement_date", settle)
-
-    df = df.withColumn(
-        "priority",
-        F.when(
-            F.col("status").contains("Break") | (F.col("notional_value") > 1_000_000),
-            "High",
-        ).otherwise("Normal"),  # producer.py:100-102
-    ).withColumn(
-        "stp_eligible",
-        ~F.col("status").isin("Break - Mismatch", "Break - Missing Trade"),  # producer.py:105
-    )
-
     base_us = int(
         dt.datetime.combine(base_date, dt.time(9, 30)).replace(tzinfo=dt.timezone.utc).timestamp()
         * 1_000_000
     )
-    jitter_us = F.pmod(
-        F.xxhash64(F.col("id"), F.lit(seed), F.lit("jitter")), F.lit(mean_interval_ms * 1000)
-    )
-    df = df.withColumn(
-        "timestamp",
-        F.timestamp_micros(
-            F.lit(base_us) + F.col("id") * (mean_interval_ms * 1000) + jitter_us
-        ),
-    )
+    step_us = mean_interval_ms * 1000
+    qty, px = _uniform(seed, "qty"), _uniform(seed, "price")
 
-    df = df.withColumn(
-        "trade_id", F.substring(F.md5(F.concat_ws("#", F.lit(seed), F.col("id"))), 1, 12)
-    ).withColumn("processed_by", _choice(ANALYSTS, seed, "analyst"))
+    def fee(tag: str, lo: float, hi: float) -> str:
+        rate = f"{_double(lo)} + {_uniform(seed, tag)} * {_double(hi - lo)}"
+        return f"round(notional_value * ({rate}), 2)"
+
+    # Per-class rules: producer.py:55, :62-76, :89-97.
+    instrument = {c: _pick(ticks, seed, f"instr_{c}") for c, ticks in INSTRUMENTS.items()}
+    quantity = {
+        c: f"CAST(floor({qty} * {hi - lo + 1}) + {lo} AS BIGINT)"
+        for c, (lo, hi, *_) in RANGES.items()
+    }
+    price = {
+        c: f"round({_double(lo)} + {px} * {_double(hi - lo)}, {dp})"
+        for c, (_, _, lo, hi, dp) in RANGES.items()
+    }
+    settlement = {c: f"date_add(trade_date, {n})" for c, n in SETTLEMENT_DAYS.items()}
+
+    # One projection per dependency level; each column is one SQL string.
+    levels = [
+        {
+            "asset_class": _pick(ASSET_CLASSES, seed, "class"),
+            "side": _pick(SIDES, seed, "side"),
+            "counterparty": _pick(COUNTERPARTIES, seed, "cpty"),
+            "status": _weighted_pick(STATUSES, STATUS_WEIGHTS, seed, "status"),
+            "settlement_venue": _pick(VENUES, seed, "venue"),
+            "trade_date": f"date_sub(DATE '{base_date.isoformat()}', "
+            f"CAST(pmod({_hash(seed, 'tdate')}, 4) AS INT))",
+            "timestamp": f"timestamp_micros({base_us} + id * {step_us} "
+            f"+ pmod({_hash(seed, 'jitter')}, {step_us}))",
+            "trade_id": f"substring(md5(concat_ws('#', {seed}, id)), 1, 12)",
+            "processed_by": _pick(ANALYSTS, seed, "analyst"),
+        },
+        {
+            "instrument": _per_class(instrument),
+            "quantity": _per_class(quantity),
+            "price": _per_class(price),
+            "settlement_date": _per_class(settlement),
+        },
+        {"notional_value": "round(quantity * price, 2)"},
+        {
+            "brokerage_fee": fee("fee_brk", 0.0001, 0.0015),  # producer.py:81
+            "clearing_fee": fee("fee_clr", 0.00005, 0.0003),  # producer.py:82
+            "exchange_fee": fee("fee_exc", 0.00003, 0.0002),  # producer.py:83
+            # producer.py:100-105
+            "priority": "CASE WHEN contains(status, 'Break') OR notional_value > 1000000 "
+            "THEN 'High' ELSE 'Normal' END",
+            "stp_eligible": "status NOT IN ('Break - Mismatch', 'Break - Missing Trade')",
+        },
+        {"total_fees": "round(brokerage_fee + clearing_fee + exchange_fee, 2)"},
+    ]
+    df = df.select("id")
+    for level in levels:
+        df = df.selectExpr("*", *[f"{sql} AS `{name}`" for name, sql in level.items()])
 
     # Project to the canonical schema order/types (single declaration,
     # unlike the reference's three copies — SURVEY.md §1.2).
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in TRADE_SCHEMA.fields]
+    return df.selectExpr(
+        *[
+            f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for f in TRADE_SCHEMA.fields
+        ]
     )
 
 
@@ -290,6 +273,18 @@ def with_duplicates(df: DataFrame, every_n: int = 50) -> DataFrame:
     return df.unionAll(dups)
 
 
+def _decimals_as_double(df: DataFrame) -> DataFrame:
+    """Cast every decimal column to double, keeping names and order."""
+    return df.select(
+        *[
+            F.col(f.name).cast("double").alias(f.name)
+            if isinstance(f.dataType, T.DecimalType)
+            else F.col(f.name)
+            for f in df.schema.fields
+        ]
+    )
+
+
 def src1_trade_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: 10k seeded trades. Oracled since r5 against the
     committed golden fixture (trade timestamps are strictly increasing
@@ -301,18 +296,7 @@ def src1_trade_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitudes (all scaled units < 2^53) — because DuckDB's Python
     DECIMALs strip trailing zeros and mismatch fixed-scale
     representations."""
-    t = trades(spark, 10_000)
-    dec_cols = {
-        f.name
-        for f in t.schema.fields
-        if f.dataType.typeName().startswith("decimal")
-    }
-    return t.select(
-        *[
-            F.col(c).cast("double").alias(c) if c in dec_cols else F.col(c)
-            for c in t.columns
-        ]
-    )
+    return _decimals_as_double(trades(spark, 10_000))
 
 
 def w4_wire_roundtrip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,17 +329,7 @@ def w4_wire_roundtrip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min_by(F.struct(*cols), F.col("timestamp")).alias("r"))
         .select("r.*")
     )
-    dec_cols = {
-        f.name
-        for f in deduped.schema.fields
-        if f.dataType.typeName().startswith("decimal")
-    }
-    return deduped.select(
-        *[
-            F.col(c).cast("double").alias(c) if c in dec_cols else F.col(c)
-            for c in deduped.columns
-        ]
-    )
+    return _decimals_as_double(deduped)
 
 
 QUERIES = {

@@ -5,6 +5,7 @@ partitionings)."""
 
 from __future__ import annotations
 
+import py4j.clientserver
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,7 +25,8 @@ def gen(spark):
 
 def test_schema_matches_canonical(gen):
     # Names and types must match the single canonical declaration;
-    # nullability flags differ (when-ladder expressions are nullable).
+    # nullability flags differ (the per-class CASEs have no ELSE, and
+    # Spark marks pmod nullable, so trade_date and timestamp are too).
     got = [(f.name, f.dataType) for f in gen.schema.fields]
     want = [(f.name, f.dataType) for f in TRADE_SCHEMA.fields]
     assert got == want
@@ -136,3 +138,28 @@ def test_event_time_monotonic_pacing(gen):
     span_s = (row["hi"] - row["lo"]).total_seconds()
     # ~0.9 s/trade mean pacing (reference U(0.3, 1.5) s, producer.py:172)
     assert 0.8 * N * 0.9 < span_s < 1.2 * N * 0.9
+
+
+def _last_job_id(spark) -> int:
+    # Job starts reach the status tracker through the listener bus.
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
+
+
+def test_build_is_a_few_py4j_calls_and_no_job(spark, monkeypatch):
+    # Plan build cost must not grow with the size of the option tables:
+    # a build is a few dozen Py4J round trips and starts no Spark job.
+    calls = 0
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    j0 = _last_job_id(spark)
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    generator.trades(spark, N)
+    monkeypatch.undo()
+    assert _last_job_id(spark) - j0 == 0
+    assert calls < 300, calls
