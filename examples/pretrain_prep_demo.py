@@ -39,7 +39,7 @@ from real_time_streaming_system_with_apache_kafka_spark.session import (  # noqa
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_session("pretrain_prep_demo", cpus="8")
+    spark = get_session("pretrain_prep_demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     urls = dedup.url_canonical_dedup(spark, sf_dir)

@@ -44,7 +44,7 @@ from real_time_streaming_system_with_apache_kafka_spark.session import (  # noqa
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_session("retrieval_demo", cpus="8")
+    spark = get_session("retrieval_demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     hits = retrieval.search_bm25_topk(spark, sf_dir)

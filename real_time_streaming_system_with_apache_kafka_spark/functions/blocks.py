@@ -58,6 +58,9 @@ from pyspark.sql import functions as F
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     oracle_cosine_unrounded,
 )
+from real_time_streaming_system_with_apache_kafka_spark.functions.memo import (
+    corpus_state,
+)
 
 # Quantizer sizing: k = ceil(sqrt(N)) cells, trained on a deterministic
 # sample of BLOCK_TRAIN_PER_CELL vectors per cell for
@@ -117,38 +120,23 @@ def _hash_order() -> list:
     return [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
 
 
-# Session-scoped quantizer memo, keyed by (corpus key, corpus
-# fingerprint). A real IVF index is TRAINED ONCE and served to every
-# query; re-learning identical centroids per registry query was the
-# artificial part (measured ~2 s/query of scheduler-bound training
-# jobs at sf0.1). Deterministic learning makes the memo semantically
-# invisible; the fingerprint is CONTENT-derived (count + a commutative
-# xxhash64 sum over (vec_id, embedding)), so a corpus rewritten in
-# place — same path, same row count, different vectors — retrains
-# instead of serving stale centroids. One extra agg in the same job
-# that already computed count(). Driver memory is O(k x dim) floats
-# per corpus.
-_QUANTIZER_CACHE: dict[tuple[str, int, int], tuple[int, list[list[float]]]] = {}
+def learn_block_quantizer(emb: DataFrame) -> tuple[int, list[list[float]]]:
+    """The count-derived blocking quantizer, (k, centroids), trained
+    once per corpus content in the session (``functions/memo.py``)."""
+    if not [f for f in emb.schema.fields if f.name == "embedding"]:
+        raise ValueError("learn_block_quantizer needs an 'embedding' column")
+    st = corpus_state(emb, "vec_id", "embedding")
+    if st["n"] == 0:
+        return 1, []
+    if "quantizer" not in st:
+        st["quantizer"] = _train_block_quantizer(emb, st["n"])
+    return st["quantizer"]
 
 
-def _corpus_fingerprint(emb: DataFrame) -> tuple[int, int]:
-    """(count, content hash) in ONE job: sum of per-row xxhash64 over
-    (vec_id, embedding) is order/partitioning-independent and changes
-    if any row's id or vector changes."""
-    row = emb.select(
-        F.count(F.lit(1)).alias("n"),
-        # decimal accumulator: a long sum of ±2^63 hashes would
-        # overflow (and THROW under Spark 4's default ANSI mode);
-        # decimal(38,0) holds 10^12 rows' worth with headroom.
-        F.sum(F.xxhash64("vec_id", "embedding").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"] or 0)
-
-
-def learn_block_quantizer(
-    emb: DataFrame, cache_key: str | None = None
+def _train_block_quantizer(
+    emb: DataFrame, n: int
 ) -> tuple[int, list[list[float]]]:
-    """Learn the count-derived blocking quantizer: (k, centroids).
+    """Train the quantizer over an ``n``-row corpus, uncached.
 
     Init = the first k corpus vectors in hash order (a deterministic
     uniform sample — unlike a lowest-vec_id init, which
@@ -159,14 +147,6 @@ def learn_block_quantizer(
     keep their previous centroid. Deterministic under any partitioning
     or executor count; the only driver traffic is the O(k x dim)
     centroid matrix per round."""
-    if not [f for f in emb.schema.fields if f.name == "embedding"]:
-        raise ValueError("learn_block_quantizer needs an 'embedding' column")
-    n, content_h = _corpus_fingerprint(emb)
-    if n == 0:
-        return 1, []
-    memo_key = (cache_key, n, content_h) if cache_key is not None else None
-    if memo_key is not None and memo_key in _QUANTIZER_CACHE:
-        return _QUANTIZER_CACHE[memo_key]
     k = block_cell_count(n)
     # The full-corpus hash-order sort is the expensive stage of
     # training — run it ONCE: checkpoint the k*BLOCK_TRAIN_PER_CELL
@@ -212,30 +192,19 @@ def learn_block_quantizer(
         )
         learned = {r.cell: list(map(float, r.centroid)) for r in rows}
         cents = [learned.get(i, cents[i]) for i in range(k)]
-    if memo_key is not None:
-        # Evict stale fingerprints for the same corpus key (a rewritten
-        # path would otherwise accumulate one dead entry per rewrite).
-        for old in [
-            key
-            for key in _QUANTIZER_CACHE
-            if key[0] == cache_key and key != memo_key
-        ]:
-            del _QUANTIZER_CACHE[old]
-        _QUANTIZER_CACHE[memo_key] = (k, cents)
     return k, cents
 
 
-def with_block_cells(emb: DataFrame, cache_key: str | None = None) -> DataFrame:
+def with_block_cells(emb: DataFrame) -> DataFrame:
     """The corpus plus its learned ``block`` cell id (map-side Arrow
     matmul against the broadcast-by-closure centroid matrix — no
-    shuffle). Model fit happens eagerly at plan-construction time,
+    shuffle). The quantizer is fit eagerly at plan-construction time,
     the same contract as sim_ivf_kmeans_topk (which shares this
-    quantizer since r7);
-    ``cache_key`` (the corpus path) lets same-corpus queries reuse the
-    trained quantizer instead of re-learning identical centroids."""
+    quantizer since r7), and same-content corpora share one trained
+    quantizer per session through ``learn_block_quantizer``."""
     if not [f for f in emb.schema.fields if f.name == "embedding"]:
         raise ValueError("with_block_cells needs an 'embedding' column")
-    _, cents = learn_block_quantizer(emb, cache_key=cache_key)
+    _, cents = learn_block_quantizer(emb)
     if not cents:  # empty corpus: no kernel group will ever run
         return emb.withColumn("block", F.lit(0))
     return emb.withColumn("block", make_assign_udf(cents)(F.col("embedding")))
@@ -276,16 +245,14 @@ def make_topn_assign_udf(centroids: list[list[float]], nprobe: int):
     return assign
 
 
-def with_multiprobe_cells(
-    emb: DataFrame, nprobe: int, cache_key: str | None = None
-) -> DataFrame:
+def with_multiprobe_cells(emb: DataFrame, nprobe: int) -> DataFrame:
     """The corpus with MULTI-PROBE cell membership: one row per
     (vec_id, block) for each vector's ``nprobe`` nearest learned
     cells. Same trained quantizer as with_block_cells (shared memo);
     the exploded frame feeds salted_block_union directly, so each
     (block, salt) kernel group sees every member — probe or boundary
     neighbor — of that cell."""
-    _, cents = learn_block_quantizer(emb, cache_key=cache_key)
+    _, cents = learn_block_quantizer(emb)
     if not cents:
         return emb.withColumn("block", F.lit(0))
     return emb.withColumn(

@@ -17,8 +17,9 @@ r3 note that kept the interpreted lambda inside `_lsh_pairs`'
 generator (an InferFiltersFromGenerate re-evaluation penalty measured
 then at sf0.1) no longer reproduces — re-measured at sf10 the regex
 form wins 2.6x end-to-end on dedup_minhash_lsh (25.5 -> 9.7 s) and is
-within noise at sf0.1. `operators/dedup._shingles` remains as the
-interpreted spec twin, equivalence-pinned in tests/test_properties.py.
+within noise at sf0.1. ``_ngrams`` below is the interpreted spec twin
+over an arbitrary words array, equivalence-pinned in
+tests/test_properties.py; no operator calls it.
 """
 
 from __future__ import annotations
@@ -39,3 +40,17 @@ def regex_word_ngrams(text: Column, n: int) -> Column:
     return F.when(
         n_words >= n, F.regexp_extract_all(safe, F.lit(pattern), 1)
     ).otherwise(F.array(safe))
+
+
+def _ngrams(words: Column, n: int) -> Column:
+    """Interpreted spec twin of ``regex_word_ngrams`` over a words
+    array, same clamp: docs shorter than ``n`` words contribute the
+    whole text as one gram (the sequence end clamps at 0, and
+    concat_ws skips the nulls ``try_element_at`` returns past the
+    array end, where a plain element_at would THROW under ANSI)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+        lambda i: F.concat_ws(
+            " ", *[F.try_element_at(words, i + k + 1) for k in range(n)]
+        ),
+    )

@@ -53,21 +53,6 @@ DECON_N = 5  # word n-gram size for contamination overlap
 N_BUCKETS = 20
 
 
-def _ngrams(words: Column, n: int) -> Column:
-    """Word n-grams with the same clamp semantics as dedup._shingles:
-    docs shorter than n words contribute the whole text as one gram.
-    Interpreted higher-order form — kept as the reference/spec twin of
-    ``functions.ngrams.regex_word_ngrams`` (the codegen hot path,
-    proven gram-identical in tests) and for callers whose input is an
-    arbitrary words array rather than a text column."""
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(words, i + k + 1) for k in range(n)]
-        ),
-    )
-
-
 def decontaminate_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing at
     least one word 5-gram with the held-out benchmark slice

@@ -39,6 +39,9 @@ from real_time_streaming_system_with_apache_kafka_spark.functions.blocks import 
     with_block_cells,
     with_multiprobe_cells,
 )
+from real_time_streaming_system_with_apache_kafka_spark.functions.memo import (
+    corpus_state,
+)
 from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
     regex_word_ngrams,
 )
@@ -56,32 +59,6 @@ COSINE_THRESHOLD = 0.35
 
 def _words() -> Column:
     return F.split(F.col("text"), " ")
-
-
-def _shingles(words: Column) -> Column:
-    """Word 3-gram shingles; degenerate docs (<3 words) contribute the
-    whole text as one shingle (sequence end clamps at 0; concat_ws
-    skips the nulls from try_element_at past the array end — a plain
-    element_at would THROW under Spark 4's default ANSI mode).
-
-    Interpreted SPEC TWIN, kept for equivalence tests and for callers
-    whose input is an arbitrary words array. The operator hot paths
-    use ``regex_word_ngrams(text, 3)`` — proven gram-identical
-    (tests/test_properties.py) and whole-stage-codegen'd: the r4
-    re-measurement at sf10 showed the interpreted lambda dominating
-    the shingle explode (19 s vs 2.4 s standalone; full
-    dedup_minhash_lsh 25.5 -> 9.7 s), overturning the r3 note that
-    kept the lambda inside the LSH generator (at sf0.1 the two are
-    within noise — the interaction penalty no longer reproduces)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
-        lambda i: F.concat_ws(
-            " ",
-            F.try_element_at(words, i + 1),
-            F.try_element_at(words, i + 2),
-            F.try_element_at(words, i + 3),
-        ),
-    )
 
 
 # CASE mirrors the Spark clamp: <3-word docs yield the whole text as
@@ -391,7 +368,7 @@ def _cosine_pairs(
         emb = load(spark, "embeddings", sf_dir)
     raw = (
         salted_block_union(
-            with_block_cells(emb, cache_key=sf_dir),
+            with_block_cells(emb),
             spark.sparkContext.defaultParallelism,
         )
         .groupBy("block", "salt")
@@ -430,7 +407,7 @@ def dedup_embedding_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, "embeddings", sf_dir)
     raw = (
         salted_block_union(
-            with_multiprobe_cells(emb, DEDUP_NPROBE, cache_key=sf_dir),
+            with_multiprobe_cells(emb, DEDUP_NPROBE),
             spark.sparkContext.defaultParallelism,
         )
         .groupBy("block", "salt")
@@ -491,46 +468,19 @@ CC_MAX_ITERS = 12  # pointer jumping: components of diameter <= 2^12
 CC_EDGE_EST = 0.5
 
 
-# Dup-graph memo: the edge set and the CC labels are CORPUS statistics
-# shared by the graph operators (CC survivors, quality survivor,
-# cluster-safe split, PageRank, triangles, LPA, k-core), so the
-# MinHash-LSH banding join runs once per corpus per session, not once
-# per operator (~2-3 s of every graph entry at sf0.1). The memo keys on
-# the corpus content fingerprint and holds checkpointed frames, which
-# read files in the checkpoint dir: nothing is pinned in executor
-# storage and a lost executor costs nothing. Dup-graph frames are
-# near-dup-density-sized, orders of magnitude under the corpus.
-_GRAPH_CACHE: dict[tuple[int, int], dict] = {}
-
-
-def _graph_state(spark: SparkSession, sf_dir: str) -> dict:
-    docs = load(spark, "documents", sf_dir)
-    row = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal accumulator: a long sum of ±2^63 hashes overflows
-        # (and THROWS under Spark 4's default ANSI mode).
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    key = (int(row["n"]), int(row["h"] or 0))
-    st = _GRAPH_CACHE.get(key)
-    if st is None:
-        while len(_GRAPH_CACHE) >= 4:  # bench/test sessions touch <=3 SFs
-            _GRAPH_CACHE.popitem()
-        st = {}
-        _GRAPH_CACHE[key] = st
-    return st
-
-
-def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dup_edges(
+    spark: SparkSession, sf_dir: str, st: dict | None = None
+) -> DataFrame:
     """Undirected near-dup graph shared by the dup-graph operator
     family — the MinHash-LSH candidate pairs qualified at
     ``CC_EDGE_EST`` signature agreement, symmetrized to (src, dst).
     One definition so the graph operators can never desynchronize.
 
-    Memoized per corpus fingerprint as a checkpoint, the edge table
-    written once per corpus per session: the LSH banding join runs
-    once, not once per graph operator."""
-    st = _graph_state(spark, sf_dir)
+    Checkpointed once per corpus per session in the documents state
+    ``st`` (fetched here when the caller holds none): the LSH banding
+    join runs once, not once per graph operator."""
+    if st is None:
+        st = corpus_state(load(spark, "documents", sf_dir), "doc_id", "text")
     if "edges" not in st:
         pairs = (
             dedup_minhash_lsh(spark, sf_dir)
@@ -567,7 +517,8 @@ def dedup_cc_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     growing lineage each round.
     """
     docs = load(spark, "documents", sf_dir)
-    labels = _cc_labels(spark, sf_dir, docs)
+    st = corpus_state(docs, "doc_id", "text")
+    labels = _cc_labels(spark, sf_dir, docs, st)
     return labels.select(
         "doc_id",
         F.col("label").alias("component"),
@@ -575,7 +526,9 @@ def dedup_cc_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cc_labels(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
+def _cc_labels(
+    spark: SparkSession, sf_dir: str, docs: DataFrame, st: dict
+) -> DataFrame:
     """Pointer-jumping min-label propagation over the memoized dup
     edge set (see dedup_cc_survivors for the algorithm argument).
 
@@ -588,16 +541,15 @@ def _cc_labels(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     iterating over 100 TB twelve times and iterating over the dup
     graph twelve times.
 
-    The FINAL label frame is memoized per corpus fingerprint (three
+    The FINAL label frame is kept in the documents state ``st`` (three
     operators consume it: CC survivors, quality survivor via
     dedup_cc_survivors, cluster-safe split)."""
-    st = _graph_state(spark, sf_dir)
     if "cc_labels" in st:
         final = st["cc_labels"].select("doc_id", "label")
         return docs.select("doc_id").join(final, "doc_id", "left").select(
             "doc_id", F.coalesce("label", "doc_id").alias("label")
         )
-    edges = _dup_edges(spark, sf_dir)
+    edges = _dup_edges(spark, sf_dir, st)
     verts = edges.select(F.col("src").alias("doc_id")).distinct()
     labels = verts.select(
         "doc_id", F.col("doc_id").alias("label")
@@ -692,8 +644,9 @@ def sample_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     three consumers share its doc_id shuffle through Spark's exchange
     reuse."""
     docs = load(spark, "documents", sf_dir)
-    edges = _dup_edges(spark, sf_dir)
-    comp = _cc_labels(spark, sf_dir, docs).select(
+    st = corpus_state(docs, "doc_id", "text")
+    edges = _dup_edges(spark, sf_dir, st)
+    comp = _cc_labels(spark, sf_dir, docs, st).select(
         "doc_id", F.col("label").alias("component")
     )
     labeled = comp.select(

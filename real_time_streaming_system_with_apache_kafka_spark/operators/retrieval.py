@@ -35,12 +35,15 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     cosine,
     oracle_cosine,
+)
+from real_time_streaming_system_with_apache_kafka_spark.functions.memo import (
+    corpus_state,
 )
 from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
     regex_word_ngrams,
@@ -75,54 +78,30 @@ _PROBE_PAIRS: list[tuple[int, str]] = sorted(
 )
 _PROBE_TERMS: list[str] = sorted({t for _, t in _PROBE_PAIRS})
 
-# Corpus-statistics memo (r9, VERDICT item 3 — same content-fingerprint
-# pattern as the BPE merge table in text.py and the quantizer in
-# functions/blocks.py): corpus totals (N docs, W words), per-probe-term
-# document frequencies, and the PRF expansion terms are TRAINED-ONCE
-# statistics of the corpus — a session running many retrieval queries
-# must not rebuild them per call. All values are plain Python ints and
-# strings (never DataFrames), so the memo pins no executor storage.
-# The fingerprint scan doubles as the totals scan: one no-shuffle agg
-# returns (count, commutative xxhash64 sum, word total), so a memo HIT
-# costs exactly one corpus pass.
-_CORPUS_CACHE: dict[tuple[int, int], dict] = {}
 
-
-def _corpus_stats(docs: DataFrame) -> dict:
-    row = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal accumulator: a long sum of ±2^63 hashes overflows
-        # (and THROWS under Spark 4's default ANSI mode).
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-        F.sum(F.size(F.split("text", " ")).cast("bigint")).alias("w"),
-    ).collect()[0]
-    key = (int(row["n"]), int(row["h"] or 0))
-    st = _CORPUS_CACHE.get(key)
-    if st is None:
-        if len(_CORPUS_CACHE) >= 8:  # bench/test sessions touch <=3 SFs
-            _CORPUS_CACHE.clear()
-        st = {"n_docs": int(row["n"]), "w_total": int(row["w"] or 0)}
-        _CORPUS_CACHE[key] = st
-    return st
-
-
-def _probe_df(docs: DataFrame, st: dict) -> dict[str, int]:
-    """Document frequency of the fixed probe terms — a dict of at most
-    len(_PROBE_TERMS) ints, computed once per corpus (terms absent
-    from the corpus get df=0 and contribute no tf rows downstream,
-    identical to the old no-row-in-df_t behavior)."""
+def _retrieval_state(docs: DataFrame) -> dict:
+    """The corpus's session state (``functions/memo.py``) with the
+    statistics every BM25 pass reads filled in once: ``"n"`` docs,
+    ``"w_total"`` words, and ``"probe_df"``, the document frequency of
+    each fixed probe term (0 for terms absent from the corpus, which
+    then contribute no tf rows downstream). The word total is an
+    observed metric of the df job, so it costs no job of its own."""
+    st = corpus_state(docs, "doc_id", "text")
     if "probe_df" not in st:
+        words = Observation()
         rows = (
-            docs.select(
-                "doc_id", F.explode(F.split("text", " ")).alias("term")
+            docs.observe(
+                words, F.sum(F.size(F.split("text", " ")).cast("bigint")).alias("w")
             )
+            .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
             .filter(F.col("term").isin(_PROBE_TERMS))
             .groupBy("term")
             .agg(F.count_distinct("doc_id").alias("df"))
         ).collect()
         found = {r["term"]: int(r["df"]) for r in rows}
         st["probe_df"] = {t: found.get(t, 0) for t in _PROBE_TERMS}
-    return st["probe_df"]
+        st["w_total"] = int(words.get["w"] or 0)
+    return st
 
 
 def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,15 +130,15 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties on doc_id ascending.
 
     Corpus totals and probe-term document frequencies come from the
-    per-corpus-fingerprint memo (``_corpus_stats``): they are
-    statistics of the corpus, not of the query, and a session running
-    many retrieval calls computes them once. A memo hit leaves two
-    corpus passes (fingerprint + tf); a miss adds the one-time df
-    aggregation.
+    session's corpus memo (``_retrieval_state``): they are statistics
+    of the corpus, not of the query, and a session running many
+    retrieval calls computes them once. A memo hit leaves two corpus
+    passes (fingerprint + tf); a miss adds the one-time df
+    aggregation, which also observes the word total.
     """
     docs = load_rebalanced(spark, "documents", sf_dir)
-    st = _corpus_stats(docs)
-    df_map = _probe_df(docs, st)
+    st = _retrieval_state(docs)
+    df_map = st["probe_df"]
     # dl rides the token stream (constant per doc, recovered with max
     # in the tf aggregation) so no corpus-sized doc_id join is needed
     # to attach document lengths — measured ~25% faster at sf0.1 than
@@ -321,7 +300,7 @@ def _bm25_scores(
     """Per-(query_id, doc_id) exact BM25 scores for an arbitrary
     (query_id, term) list: the reusable scoring half every retrieval
     entry compiles. Corpus totals and per-term document frequencies
-    arrive as MEMOIZED plain values (see ``_corpus_stats``), so the
+    arrive as MEMOIZED plain values (see ``_retrieval_state``), so the
     whole scoring pass costs ONE corpus scan — the tf aggregation with
     the term list pruned map-side via a literal isin (the term lists
     here are probe + mined terms, always ≤ ~20 strings)."""
@@ -333,7 +312,7 @@ def _bm25_scores(
         [(t, int(df_map.get(t, 0))) for t in terms], "term string, df bigint"
     )
     totals = spark.createDataFrame(
-        [(st["n_docs"], st["w_total"])], "n_docs bigint, w_total bigint"
+        [(st["n"], st["w_total"])], "n_docs bigint, w_total bigint"
     )
     tf = (
         toks.filter(F.col("term").isin(terms))
@@ -374,15 +353,15 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The expansion terms (queries x {PRF_EXPAND_TERMS} strings) and
     their document frequencies are statistics of the corpus, so they
-    live in the per-corpus-fingerprint memo next to N/W/probe-df:
+    live in the session corpus memo next to N/W/probe-df:
     computed once per session per corpus, with pass 1 + mining run as
     driver-collected bounded values (queries x E rows — never
     corpus-sized). The mined-term table is not held as a DataFrame
     for the session, and a memo hit runs ONLY pass 2 — the
     fingerprint scan plus one tf scan."""
     docs = load_rebalanced(spark, "documents", sf_dir)
-    st = _corpus_stats(docs)
-    df_map = _probe_df(docs, st)
+    st = _retrieval_state(docs)
+    df_map = st["probe_df"]
     toks = docs.select(
         "doc_id",
         F.size(F.split("text", " ")).cast("bigint").alias("dl"),
@@ -430,7 +409,7 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "term",
             "df",
-            (F.col("tf") * (st["n_docs"] - F.col("df"))).alias("score"),
+            (F.col("tf") * (st["n"] - F.col("df"))).alias("score"),
         )
         wm = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("term")

@@ -213,7 +213,7 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, "embeddings", sf_dir).filter(
         F.size("embedding") == EMBEDDING_DIM
     )
-    k, cents = learn_block_quantizer(emb, cache_key=sf_dir)
+    k, cents = learn_block_quantizer(emb)
     corpus = emb.withColumn(
         "cell",
         F.explode(
@@ -1091,7 +1091,7 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, "embeddings", sf_dir)
     raw = (
         salted_block_union(
-            with_block_cells(emb, cache_key=sf_dir),
+            with_block_cells(emb),
             spark.sparkContext.defaultParallelism,
         )
         .groupBy("block", "salt")

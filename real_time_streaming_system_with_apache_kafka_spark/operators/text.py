@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.functions.memo import (
+    corpus_state,
+)
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import (
     load,
     load_rebalanced,
@@ -299,8 +302,8 @@ def vocab_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same algorithm in the JVM and DuckDB — the oracle unrolls the
     rounds as chained CTEs (scalar-subquery winners feeding the next
     round's replace) and matches exactly. The trained table is memoized
-    per corpus fingerprint (``_MERGE_CACHE``) so the apply entry in the
-    same session reuses it instead of retraining."""
+    per corpus content (``_learn_merges_for_docs``) so the apply entry
+    in the same session reuses it instead of retraining."""
     docs = load(spark, "documents", sf_dir)
     raw = _learn_merges_for_docs(docs, BPE_MERGE_ROUNDS)
     return spark.createDataFrame(
@@ -356,39 +359,16 @@ def learn_merges(vocab: DataFrame, rounds: int) -> DataFrame:
     )
 
 
-# Merge-table memo (same pattern as the quantizer memo in
-# functions/blocks.py): a BPE merge table is TRAINED ONCE per corpus
-# and shipped to every consumer — within one session,
-# vocab_bpe_learn_merges and tokenize_with_learned_bpe must not
-# retrain on the same bytes. The key is CONTENT-derived (doc count +
-# commutative xxhash64 sum over (doc_id, text)), so a rewritten corpus
-# at the same path retrains and two paths with identical content share.
-# The fingerprint costs one corpus scan with no shuffle — strictly
-# cheaper than the vocabulary build it lets a memo hit skip.
-_MERGE_CACHE: dict[
-    tuple[int, int, int], list[tuple[int, str, str, str, str, int]]
-] = {}
-
-
-def _docs_fingerprint(docs: DataFrame) -> tuple[int, int]:
-    row = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal accumulator: a long sum of ±2^63 hashes overflows
-        # (and THROWS under Spark 4's default ANSI mode).
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"] or 0)
-
-
 def _learn_merges_for_docs(
     docs: DataFrame, rounds: int
 ) -> list[tuple[int, str, str, str, str, int]]:
-    key = (*_docs_fingerprint(docs), rounds)
-    if key not in _MERGE_CACHE:
-        if len(_MERGE_CACHE) >= 8:  # bench/test sessions touch <=3 SFs
-            _MERGE_CACHE.clear()
-        _MERGE_CACHE[key] = _learn_merges_raw(_corpus_vocab(docs), rounds)
-    return _MERGE_CACHE[key]
+    """The merge table, trained once per corpus content in the session
+    (``functions/memo.py``)."""
+    st = corpus_state(docs, "doc_id", "text")
+    key = ("bpe_merges", rounds)
+    if key not in st:
+        st[key] = _learn_merges_raw(_corpus_vocab(docs), rounds)
+    return st[key]
 
 
 def _learn_merges_raw(
@@ -438,7 +418,7 @@ def tokenize_with_learned_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle, no explode, embarrassingly parallel. The oracle
     reruns the training CTEs and applies the same replaces via scalar
     subqueries, so train and apply stay one definition. Training goes
-    through the corpus-fingerprint memo: when vocab_bpe_learn_merges
+    through the corpus memo: when vocab_bpe_learn_merges
     already trained in this session, apply pays one no-shuffle
     fingerprint scan instead of the vocabulary build + rounds."""
     docs = load(spark, "documents", sf_dir)

@@ -71,9 +71,11 @@ TRADE_WIRE_SCHEMA = T.StructType(
 )
 
 # Logical (post-load) schemas of the extension tables. NOTE: do NOT use
-# these for schema-on-read of the raw parquet — events.parquet stores
-# `ts` as TIMESTAMP(NANOS), which the loader surfaces as long and
-# converts (see sources/tables.py::load, the only supported read path).
+# these for schema-on-read of the raw parquet — read through
+# sources/tables.py::load, the only supported read path. The provisioned
+# events.parquet stores `ts` as microsecond TIMESTAMP with
+# isAdjustedToUTC=false, which the loader reads as session-tz TIMESTAMP;
+# a TIMESTAMP(NANOS) input surfaces as long and the loader converts it.
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

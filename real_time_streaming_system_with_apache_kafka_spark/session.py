@@ -56,8 +56,9 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # The events table stores TIMESTAMP(NANOS) which the vectorized
-    # parquet reader rejects; read it as long and convert in the loader.
+    # A parquet TIMESTAMP(NANOS) column is rejected by the vectorized
+    # reader; read it as long and convert in the loader. The provisioned
+    # events.ts is microsecond TIMESTAMP, so this only guards other input.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Driver parquet writes timestamps without isAdjustedToUTC metadata;
     # with NTZ inference on, Spark 4 surfaces them as TIMESTAMP_NTZ, which

@@ -25,12 +25,11 @@ def load(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame
     sf_dir = sf_dir or DEFAULT_SF_DIR
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # The driver's events.ts is parquet TIMESTAMP(NANOS), surfaced
-        # as epoch-nanos long (see pin_session_defaults); re-derived
-        # copies (e.g. the sf1 soak replica) already carry a true
-        # timestamp, hence the dtype gate. Integer division keeps the
-        # microsecond value exact (double division would lose precision
-        # above 2^53 ns).
+        # A parquet TIMESTAMP(NANOS) events.ts surfaces as epoch-nanos
+        # long (see pin_session_defaults). The provisioned sf0.001-sf0.1
+        # files store microsecond TIMESTAMP and skip this branch, hence
+        # the dtype gate. Integer division keeps the microsecond value
+        # exact (double division would lose precision above 2^53 ns).
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

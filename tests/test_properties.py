@@ -111,10 +111,8 @@ def test_regex_ngrams_equal_lambda_spec_on_arbitrary_words(spark, words, n):
     spec for ARBITRARY single-space-joined word lists (not just the
     fixture corpus), for every n in operator use."""
     from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
-        regex_word_ngrams,
-    )
-    from real_time_streaming_system_with_apache_kafka_spark.operators.curation import (
         _ngrams,
+        regex_word_ngrams,
     )
 
     text = " ".join(words)

@@ -310,10 +310,8 @@ def test_regex_ngrams_match_lambda_form(spark, sf_dir):
     and every n used by an operator (3: diversity/shingles, 5:
     decontamination)."""
     from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
-        regex_word_ngrams,
-    )
-    from real_time_streaming_system_with_apache_kafka_spark.operators.curation import (
         _ngrams,
+        regex_word_ngrams,
     )
 
     docs = load(spark, "documents", sf_dir)
@@ -335,10 +333,8 @@ def test_regex_ngrams_null_text_matches_spec(spark):
     twin, not [NULL] — a null gram would silently diverge from DuckDB
     count(DISTINCT) semantics if a corpus ever carried null text."""
     from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
-        regex_word_ngrams,
-    )
-    from real_time_streaming_system_with_apache_kafka_spark.operators.curation import (
         _ngrams,
+        regex_word_ngrams,
     )
 
     df = spark.createDataFrame([(None,)], "text string")
@@ -629,13 +625,16 @@ def test_block_quantizer_partition_independent(spark, sf_smoke):
     means). Pin it: the same corpus through different partition
     counts must learn IDENTICAL centroids and assign IDENTICAL cells."""
     from real_time_streaming_system_with_apache_kafka_spark.functions.blocks import (
-        learn_block_quantizer,
+        _train_block_quantizer,
         make_assign_udf,
     )
 
     emb = load(spark, "embeddings", sf_smoke)
-    k1, c1 = learn_block_quantizer(emb.repartition(3))
-    k2, c2 = learn_block_quantizer(emb.repartition(13))
+    n = emb.count()
+    # The uncached trainer: learn_block_quantizer would serve the second
+    # call from the session memo and compare a result with itself.
+    k1, c1 = _train_block_quantizer(emb.repartition(3), n)
+    k2, c2 = _train_block_quantizer(emb.repartition(13), n)
     assert k1 == k2
     assert c1 == c2  # float-exact: every mean is decimal-exact
     a1 = {
@@ -657,7 +656,7 @@ def test_block_quantizer_partition_independent(spark, sf_smoke):
 
 def test_block_quantizer_memo_keys_do_not_collide_across_corpora(spark):
     """sf0.001 and sf0.01 embeddings both hold 500 vectors but are
-    different corpora: the (path, count) memo key must keep their
+    different corpora: the content-derived memo key must keep their
     trained quantizers separate."""
     from real_time_streaming_system_with_apache_kafka_spark.functions.blocks import (
         learn_block_quantizer,
@@ -667,12 +666,12 @@ def test_block_quantizer_memo_keys_do_not_collide_across_corpora(spark):
     b = "/root/testdata/sf0.01"
     emb_a = load(spark, "embeddings", a)
     emb_b = load(spark, "embeddings", b)
-    ka, ca = learn_block_quantizer(emb_a, cache_key=a)
-    kb, cb = learn_block_quantizer(emb_b, cache_key=b)
+    ka, ca = learn_block_quantizer(emb_a)
+    kb, cb = learn_block_quantizer(emb_b)
     assert ka == kb == 23  # ceil(sqrt(500))
     assert ca != cb, "different corpora must learn different centroids"
     # And the memo returns the SAME object on a repeat call.
-    ka2, ca2 = learn_block_quantizer(emb_a, cache_key=a)
+    ka2, ca2 = learn_block_quantizer(emb_a)
     assert ca2 is ca
 
 
@@ -692,14 +691,14 @@ def test_quantizer_memo_invalidated_by_content_rewrite(spark, tmp_path):
     src = load(spark, "embeddings", "/root/testdata/sf0.001")
     src.write.mode("overwrite").parquet(path)
     emb1 = spark.read.parquet(path)
-    k1, c1 = learn_block_quantizer(emb1, cache_key=path)
+    k1, c1 = learn_block_quantizer(emb1)
     # Rewrite IN PLACE: same vec_ids/count, every vector negated.
     rewritten = src.withColumn(
         "embedding", F.transform("embedding", lambda x: -x)
     )
     rewritten.write.mode("overwrite").parquet(path)
     emb2 = spark.read.parquet(path)
-    k2, c2 = learn_block_quantizer(emb2, cache_key=path)
+    k2, c2 = learn_block_quantizer(emb2)
     assert k2 == k1  # same count -> same cell count
     assert c2 != c1, "content rewrite must invalidate the memo"
     # And the fresh centroids really come from the rewritten data:

@@ -8,6 +8,9 @@ import json
 import duckdb
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import (
+    regex_word_ngrams,
+)
 from real_time_streaming_system_with_apache_kafka_spark.operators import dedup
 from real_time_streaming_system_with_apache_kafka_spark.streaming import ingest, sinks
 
@@ -42,7 +45,8 @@ def test_poison_record_with_valid_key_is_skipped(spark, tmp_path):
 def test_degenerate_short_docs_shingle_parity(spark):
     """<3-word documents must produce the whole text as one shingle in
     BOTH engines (Spark used to throw under ANSI; the oracle used to
-    drop the doc entirely)."""
+    drop the doc entirely). Checks ``regex_word_ngrams(text, 3)``, the
+    path every shingle operator runs."""
     texts = ["one", "two words", "now three words here", ""]
     sdf = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
@@ -50,7 +54,8 @@ def test_degenerate_short_docs_shingle_parity(spark):
     got = {
         r["doc_id"]: sorted(r["sh"])
         for r in sdf.select(
-            "doc_id", F.array_distinct(dedup._shingles(dedup._words())).alias("sh")
+            "doc_id",
+            F.array_distinct(regex_word_ngrams(F.col("text"), 3)).alias("sh"),
         ).collect()
     }
     assert got[0] == ["one"]

@@ -146,7 +146,7 @@ def test_kmeans_cells_are_balanced(spark, sf_dir):
 
     emb = similarity.load(spark, "embeddings", sf_dir)
     n = emb.count()
-    k, cents = blocks.learn_block_quantizer(emb, cache_key=sf_dir)
+    k, cents = blocks.learn_block_quantizer(emb)
     assert k == blocks.block_cell_count(n)  # count-derived, not fixed
     assert len(cents) == k
     counts = {

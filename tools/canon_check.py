@@ -99,7 +99,7 @@ def main(argv: list[str]) -> int:
     queries = registry.all_queries()
     oracles = registry.all_oracles()
     names = argv or sorted(oracles)
-    spark = get_session("canon_check", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_session("canon_check")
     bad: list[str] = []
     for name in names:
         try:
