@@ -696,9 +696,6 @@ def events_active_users_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", F.to_date("ts").alias("d"))
         .distinct()
     )
-    # One date literal of model state: the corpus's last day, used to
-    # clip window contributions that would land past the data.
-    max_d = ud.agg(F.max("d")).collect()[0][0]
     dau = ud.groupBy(F.col("d").alias("day")).agg(
         F.count(F.lit(1)).alias("dau")
     )
@@ -713,12 +710,13 @@ def events_active_users_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).alias("day"),
             )
-            .filter(F.col("day") <= F.lit(max_d))
             .distinct()
             .groupBy("day")
             .agg(F.count(F.lit(1)).alias(name))
         )
         rolled.append(contrib)
+    # Inner joins on the dau days: contributions that land on a day
+    # with no activity, past the corpus's last day included, drop out.
     out = rolled[0]
     for r in rolled[1:]:
         out = out.join(r, "day")

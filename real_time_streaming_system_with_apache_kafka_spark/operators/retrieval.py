@@ -49,6 +49,7 @@ from real_time_streaming_system_with_apache_kafka_spark.functions.ngrams import 
     regex_word_ngrams,
 )
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import (
+    load,
     load_rebalanced,
 )
 
@@ -79,13 +80,16 @@ _PROBE_PAIRS: list[tuple[int, str]] = sorted(
 _PROBE_TERMS: list[str] = sorted({t for _, t in _PROBE_PAIRS})
 
 
-def _retrieval_state(docs: DataFrame) -> dict:
+def _retrieval_state(spark: SparkSession, sf_dir: str) -> dict:
     """The corpus's session state (``functions/memo.py``) with the
     statistics every BM25 pass reads filled in once: ``"n"`` docs,
     ``"w_total"`` words, and ``"probe_df"``, the document frequency of
     each fixed probe term (0 for terms absent from the corpus, which
     then contribute no tf rows downstream). The word total is an
-    observed metric of the df job, so it costs no job of its own."""
+    observed metric of the df job, so it costs no job of its own.
+    Both passes are order-independent aggregates, so they read the
+    documents as laid out, with no rebalancing shuffle."""
+    docs = load(spark, "documents", sf_dir)
     st = corpus_state(docs, "doc_id", "text")
     if "probe_df" not in st:
         words = Observation()
@@ -136,8 +140,8 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes (fingerprint + tf); a miss adds the one-time df
     aggregation, which also observes the word total.
     """
+    st = _retrieval_state(spark, sf_dir)
     docs = load_rebalanced(spark, "documents", sf_dir)
-    st = _retrieval_state(docs)
     df_map = st["probe_df"]
     # dl rides the token stream (constant per doc, recovered with max
     # in the tf aggregation) so no corpus-sized doc_id join is needed
@@ -359,8 +363,8 @@ def search_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized). The mined-term table is not held as a DataFrame
     for the session, and a memo hit runs ONLY pass 2 — the
     fingerprint scan plus one tf scan."""
+    st = _retrieval_state(spark, sf_dir)
     docs = load_rebalanced(spark, "documents", sf_dir)
-    st = _retrieval_state(docs)
     df_map = st["probe_df"]
     toks = docs.select(
         "doc_id",

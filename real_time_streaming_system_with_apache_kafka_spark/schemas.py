@@ -6,9 +6,9 @@ producer.py:107-128, Postgres DDL consumer.py:37-58, pandas re-inference
 dashboard.py:70-71). Generator, stream reader, and batch tables all share
 this one StructType.
 
-Star-schema StructTypes mirror the driver-provisioned parquet tables
-(FIXTURES.md §2); they are declared for schema-on-read streaming sources
-and validation, while plain batch reads rely on parquet's own metadata.
+``STAR_TABLES`` names the driver-provisioned parquet tables (FIXTURES.md
+§2). They declare no StructType here: the batch loader
+(``sources/tables.py``) reads each table's schema from its parquet footer.
 """
 
 from __future__ import annotations
@@ -67,41 +67,6 @@ TRADE_WIRE_SCHEMA = T.StructType(
         T.StructField("stp_eligible", T.BooleanType()),
         T.StructField("timestamp", T.StringType()),
         T.StructField("processed_by", T.StringType()),
-    ]
-)
-
-# Logical (post-load) schemas of the extension tables. NOTE: do NOT use
-# these for schema-on-read of the raw parquet — read through
-# sources/tables.py::load, the only supported read path. The provisioned
-# events.parquet stores `ts` as microsecond TIMESTAMP with
-# isAdjustedToUTC=false, which the loader reads as session-tz TIMESTAMP;
-# a TIMESTAMP(NANOS) input surfaces as long and the loader converts it.
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
     ]
 )
 

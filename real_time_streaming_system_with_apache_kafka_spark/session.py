@@ -57,15 +57,17 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     # A parquet TIMESTAMP(NANOS) column is rejected by the vectorized
-    # reader; read it as long and convert in the loader. The provisioned
-    # events.ts is microsecond TIMESTAMP, so this only guards other input.
+    # reader; the loader declares it long and converts events.ts. The
+    # provisioned events.ts is microsecond TIMESTAMP, so this only guards
+    # other input.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Driver parquet writes timestamps without isAdjustedToUTC metadata;
     # with NTZ inference on, Spark 4 surfaces them as TIMESTAMP_NTZ, which
     # breaks unix_micros/window arithmetic and diverges from the DuckDB
-    # oracle's naive-as-UTC reading. Read them as session-tz TIMESTAMP
-    # (session tz pinned UTC above) so the wall-clock values are identical
-    # and filter pushdown still reaches the scan.
+    # oracle's naive-as-UTC reading. The table loader declares such
+    # columns as session-tz TIMESTAMP (session tz pinned UTC above), so
+    # this only governs reads that still infer their schema, such as
+    # sources/layout.py's.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     # Timestamp parity is meaningless if the pin silently failed (e.g. a
     # future Spark makes the conf static): fail loudly, not with a

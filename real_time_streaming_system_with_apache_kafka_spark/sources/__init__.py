@@ -1,3 +1,3 @@
-from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load, load_all
+from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load
 
-__all__ = ["load", "load_all"]
+__all__ = ["load"]

@@ -2,79 +2,69 @@
 
 Parquet is the canonical at-rest format (the reference's PostgreSQL table,
 consumer.py:37-58, maps to a columnar table Spark can scan with predicate
-pushdown + column pruning). Loads are plain ``spark.read.parquet`` so
-Catalyst keeps full pushdown/pruning freedom — no eager caching, no
-collect.
+pushdown + column pruning). ``load`` reads each table's schema from its
+parquet footer with pyarrow, driver-side, and declares it through
+``spark.read.schema(...)``. An undeclared read would run a Spark job to
+infer the schema; a declared one lets a plan over the tables build with
+no job. Loads stay lazy — no eager caching, no collect.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from real_time_streaming_system_with_apache_kafka_spark.schemas import STAR_TABLES
 from real_time_streaming_system_with_apache_kafka_spark.session import pin_session_defaults
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# Spark writes timestamps as INT96 by default; pyarrow would surface
+# those as timestamp[ns] and the loader would mistake them for
+# TIMESTAMP(NANOS) columns.
+_PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
 
 
-def load(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    """Load one star-schema table as a lazy DataFrame."""
+def _scan(spark: SparkSession, name: str, sf_dir: str) -> tuple[DataFrame, int]:
+    """The lazy table and its rowgroup count, both from one footer read.
+    The count is -1 unless the table is a single local file."""
     pin_session_defaults(spark)
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # A parquet TIMESTAMP(NANOS) events.ts surfaces as epoch-nanos
-        # long (see pin_session_defaults). The provisioned sf0.001-sf0.1
-        # files store microsecond TIMESTAMP and skip this branch, hence
-        # the dtype gate. Integer division keeps the microsecond value
-        # exact (double division would lose precision above 2^53 ns).
-        from pyspark.sql import functions as F
-
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    footer = ds.dataset(path, format=_PARQUET)
+    # A parquet TIMESTAMP(NANOS) column reads as epoch-nanos long under
+    # spark.sql.legacy.parquet.nanosAsLong (see pin_session_defaults);
+    # declared as timestamp, the read fails on the type mismatch.
+    arrow = pa.schema(
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        else f
+        for f in footer.schema
+    )
+    schema = from_arrow_schema(arrow, prefer_timestamp_ntz=False)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
+        # The provisioned sf0.001-sf0.1 files store microsecond TIMESTAMP
+        # and skip this branch. Integer division keeps the microsecond
+        # value exact (double division would lose precision above
+        # 2^53 ns).
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    ntz_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "timestamp_ntz"]
-    if ntz_cols:
-        # Defense in depth: if the NTZ-inference pin didn't take (static
-        # conf on a future Spark, or a session created before the pin),
-        # normalize to session-tz TIMESTAMP here. With the session pinned
-        # UTC the wall-clock values are unchanged.
-        from pyspark.sql import functions as F
-
-        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-    return df
+    rowgroups = -1
+    if os.path.isfile(path):
+        rowgroups = next(footer.get_fragments()).num_row_groups
+    return df, rowgroups
 
 
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Load every table; keys match the DuckDB oracle view names."""
-    return {name: load(spark, name, sf_dir) for name in STAR_TABLES}
+def load(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
+    """Load one star-schema table as a lazy DataFrame."""
+    return _scan(spark, name, sf_dir)[0]
 
 
-_ROWGROUP_CACHE: dict[str, int] = {}
-
-
-def _parquet_rowgroups(path: str) -> int:
-    """Rowgroup count from the parquet footer (the same metadata any
-    planner reads); -1 when the footer isn't locally inspectable
-    (object store path, missing file) — callers treat that as
-    'properly laid out' and skip the rebalance."""
-    if path in _ROWGROUP_CACHE:
-        return _ROWGROUP_CACHE[path]
-    n = -1
-    try:
-        if os.path.isfile(path):
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(path).num_row_groups
-    except Exception:  # noqa: BLE001 — footer probe is best-effort
-        n = -1
-    _ROWGROUP_CACHE[path] = n
-    return n
-
-
-def load_rebalanced(
-    spark: SparkSession, name: str, sf_dir: str | None = None
-) -> DataFrame:
+def load_rebalanced(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Load for CPU-heavy per-row kernels (hashing, shingling, JSON
     codec, Arrow UDF encode): when the at-rest layout is degenerate —
     fewer rowgroups than cores, so the parquet scan cannot fan out past
@@ -88,12 +78,11 @@ def load_rebalanced(
     128 MB rowgroups emitting 10 MB files — exactly the bench fixtures
     here), and the only scale-correct remedy Spark offers is an
     explicit exchange, priced at one pass over the (small, by
-    construction) pathological input.
+    construction) pathological input. Only a single local file is
+    checked; a directory of files gets no rebalance.
     """
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    df = load(spark, name, sf_dir)
+    df, rowgroups = _scan(spark, name, sf_dir)
     cores = spark.sparkContext.defaultParallelism
-    rg = _parquet_rowgroups(os.path.join(sf_dir, f"{name}.parquet"))
-    if 0 <= rg < cores:
+    if 0 <= rowgroups < cores:
         df = df.repartition(cores)
     return df

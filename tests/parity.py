@@ -16,6 +16,15 @@ import duckdb
 from real_time_streaming_system_with_apache_kafka_spark.schemas import STAR_TABLES
 
 
+def last_job_id(spark) -> int:
+    """The newest Spark job id; a difference of two counts the jobs in
+    between. Job starts reach the status tracker through the listener
+    bus. Unlike the number of retained jobs, the id does not saturate at
+    spark.ui.retainedJobs over a long session."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
+
+
 def run_oracle(sql: str, sf_dir: str):
     con = duckdb.connect()
     for t in STAR_TABLES:

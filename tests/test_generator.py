@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from real_time_streaming_system_with_apache_kafka_spark import generator
 from real_time_streaming_system_with_apache_kafka_spark.schemas import TRADE_SCHEMA
+from tests.parity import last_job_id
 
 N = 20_000
 
@@ -140,12 +141,6 @@ def test_event_time_monotonic_pacing(gen):
     assert 0.8 * N * 0.9 < span_s < 1.2 * N * 0.9
 
 
-def _last_job_id(spark) -> int:
-    # Job starts reach the status tracker through the listener bus.
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
-
-
 def test_build_is_a_few_py4j_calls_and_no_job(spark, monkeypatch):
     # Plan build cost must not grow with the size of the option tables:
     # a build is a few dozen Py4J round trips and starts no Spark job.
@@ -157,9 +152,9 @@ def test_build_is_a_few_py4j_calls_and_no_job(spark, monkeypatch):
         calls += 1
         return send(self, *args, **kwargs)
 
-    j0 = _last_job_id(spark)
+    j0 = last_job_id(spark)
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
     generator.trades(spark, N)
     monkeypatch.undo()
-    assert _last_job_id(spark) - j0 == 0
+    assert last_job_id(spark) - j0 == 0
     assert calls < 300, calls

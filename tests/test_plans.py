@@ -971,7 +971,8 @@ def test_rfm_single_customer_shuffle_bounds_broadcast(spark, sf_dir):
 def test_rolling_actives_contribution_explode_no_self_join(spark, sf_dir):
     """The trailing-window distinct rewrites as contribution explode +
     re-distinct — no per-day self-join of the corpus, no corpus
-    cartesian; the date-bound is a 1-row broadcast."""
+    cartesian, and no scan for a date bound: contributions past the
+    last day drop out in the join on the dau days."""
     from real_time_streaming_system_with_apache_kafka_spark.operators import analytics
 
     plan = _plan(analytics.events_active_users_rolling(spark, sf_dir))
