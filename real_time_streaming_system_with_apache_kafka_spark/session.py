@@ -9,7 +9,11 @@ the same code is correct on a real multi-executor cluster:
   raise this or rely on AQE's initialPartitionNum),
 - UTC session timezone so timestamp semantics are engine-independent
   (parity with the DuckDB oracle and any downstream store),
-- Arrow enabled for the few pandas-UDF code paths.
+- Arrow enabled for the few pandas-UDF code paths,
+- streaming checkpoints written through the Hadoop ``FileSystem`` API:
+  pip PySpark ships no ``libhadoop``, so the default ``FileContext``
+  manager resolves every checkpoint file status by forking a
+  ``readlink`` process.
 """
 
 from __future__ import annotations
@@ -40,6 +44,17 @@ def get_session(app_name: str = "rtss_spark", cpus: str | None = None) -> SparkS
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # Without libhadoop, the default FileContext-based manager forks
+        # a `readlink` for every offset, commit, state and .crc file. On
+        # a local master both managers write a temp file and rename it,
+        # which is atomic; this one checks exists-then-rename where the
+        # other renames without overwrite, which only two drivers
+        # writing one checkpoint could tell apart.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,6 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _is_target_absent(exc) -> bool:
@@ -36,11 +37,7 @@ def _is_target_absent(exc) -> bool:
                 cls = None
             break
     if cls is not None:
-        return cls in {
-            "PATH_NOT_FOUND",
-            "TABLE_OR_VIEW_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",  # empty dir created by a racing writer
-        }
+        return cls in {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"}
     # Legacy/uncategorized fallback: match the message shape.
     msg = str(exc)
     return "Path does not exist" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg
@@ -83,8 +80,13 @@ def keyed_upsert_foreach_batch(
         try:
             # Works for any filesystem URI (s3://, hdfs://, file:/ …) —
             # a driver-local os.path probe would silently skip the
-            # anti-join everywhere but bare local paths.
-            existing = spark.read.parquet(target_path).select(*key_cols)
+            # anti-join everywhere but bare local paths. The declared
+            # key schema spares a schema-inference job per batch, and
+            # an empty target directory reads as no rows. A key column
+            # missing from the target's files would read as null, so
+            # the target must be one this sink wrote.
+            key_schema = StructType([batch.schema[k] for k in key_cols])
+            existing = spark.read.schema(key_schema).parquet(target_path)
             deduped = deduped.join(existing, on=key_cols, how="left_anti")
         except AnalysisException as e:
             # Only the target-absent bootstrap case may skip the

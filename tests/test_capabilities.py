@@ -5,6 +5,8 @@
   re-pin the session so hashes can't silently flip (VERDICT r1 #6).
 - The loader gives a context without a checkpoint dir one under the
   context's own SparkFiles root, and leaves a caller's dir alone.
+- The session factory writes streaming checkpoints through the Hadoop
+  FileSystem API, not the default FileContext manager.
 - Kafka end-to-end stays gated on connector+broker availability
   (VERDICT r1 #5): the test body is real and runs the moment the
   environment ships ``spark-sql-kafka-0-10`` and a broker at
@@ -75,6 +77,19 @@ def test_caller_checkpoint_dir_survives_pin(spark, sf_dir, tmp_path):
         # setCheckpointDir adds a fresh subdirectory, so this restores
         # the session's root, not the exact subdirectory.
         sc.setCheckpointDir(own)
+
+
+def test_session_factory_writes_checkpoints_through_filesystem_api(spark, tmp_path):
+    """The factory's streaming checkpoints go through the Hadoop
+    FileSystem manager: the default FileContext one forks a `readlink`
+    per checkpoint file when no libhadoop is loaded."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
 
 
 def _kafka_available() -> bool:

@@ -9,6 +9,7 @@ import json
 import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from real_time_streaming_system_with_apache_kafka_spark import generator
@@ -143,25 +144,93 @@ def test_break_alerts_only_breaks(spark, wire_dir):
     assert out.filter(~F.col("status").contains("Break")).count() == 0
 
 
-def test_keyed_upsert_sink_on_conflict_do_nothing(spark, wire_dir, tmp_path):
-    path, n_base, n_dup = wire_dir
-    target = str(tmp_path / "trades_table")
-    ckpt = str(tmp_path / "ckpt")
+def _start_upsert(spark, path, sink, ckpt):
+    """One wire file per micro-batch into a ``foreachBatch`` sink."""
     stream = ingest.read_trade_stream_from_json_dir(
         spark, path, max_files_per_trigger=1
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            sinks.keyed_upsert_foreach_batch(target, ["trade_id"])
-        )
+    return (
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .start()
     )
+
+
+def _drain_upsert(spark, path, target, ckpt):
+    q = _start_upsert(
+        spark, path, sinks.keyed_upsert_foreach_batch(target, ["trade_id"]), ckpt
+    )
     q.processAllAvailable()
     q.stop()
-    stored = spark.read.parquet(target)
+    return spark.read.parquet(target)
+
+
+def test_keyed_upsert_sink_on_conflict_do_nothing(spark, wire_dir, tmp_path):
+    path, n_base, n_dup = wire_dir
+    stored = _drain_upsert(
+        spark, path, str(tmp_path / "trades_table"), str(tmp_path / "ckpt")
+    )
     assert stored.count() == n_base
     assert stored.select("trade_id").distinct().count() == n_base
+
+
+def test_keyed_upsert_sink_starts_on_an_empty_target(spark, wire_dir, tmp_path):
+    """An existing empty target directory reads as no rows under the
+    declared key schema, so the first batch anti-joins against nothing
+    and the drain ends as on an absent target."""
+    path, n_base, n_dup = wire_dir
+    target = tmp_path / "trades_table"
+    target.mkdir()
+    stored = _drain_upsert(spark, path, str(target), str(tmp_path / "ckpt"))
+    assert stored.count() == n_base
+    assert stored.select("trade_id").distinct().count() == n_base
+
+
+def test_keyed_upsert_sink_replays_a_crashed_batch_exactly_once(
+    spark, wire_dir, tmp_path
+):
+    """Crash after epoch 1's upsert landed and before its commit: the
+    restart on the same checkpoint replays epoch 1 into a target that
+    already holds its rows, and the anti-join keeps the sink free of
+    duplicates and loss."""
+    path, n_base, n_dup = wire_dir
+    target = str(tmp_path / "trades_table")
+    ckpt = str(tmp_path / "ckpt")
+    upsert = sinks.keyed_upsert_foreach_batch(target, ["trade_id"])
+    crashed = []
+
+    def upsert_then_crash(batch, epoch_id):
+        upsert(batch, epoch_id)
+        if epoch_id == 1 and not crashed:
+            crashed.append(epoch_id)
+            raise RuntimeError("injected crash after the epoch-1 upsert")
+
+    q = _start_upsert(spark, path, upsert_then_crash, ckpt)
+    with pytest.raises(StreamingQueryException):
+        q.processAllAvailable()
+    q.stop()
+    assert crashed == [1]
+    # The offset log holds epoch 1; the commit log does not.
+    assert os.path.exists(os.path.join(ckpt, "offsets", "1"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "1"))
+    # Epochs 0 and 1 landed; the later epochs did not.
+    assert 0 < spark.read.parquet(target).count() < n_base
+
+    q = _start_upsert(spark, path, upsert, ckpt)
+    q.processAllAvailable()
+    q.stop()
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))
+    ids = [r[0] for r in spark.read.parquet(target).select("trade_id").collect()]
+    want = {
+        r[0]
+        for r in ingest.parse_wire(spark.read.text(path))
+        .select("trade_id")
+        .distinct()
+        .collect()
+    }
+    assert len(want) == n_base
+    assert len(ids) == len(set(ids))
+    assert set(ids) == want
 
 
 def test_parquet_append_exactly_once(spark, wire_dir, tmp_path):
