@@ -1,27 +1,20 @@
-"""Vector/array kernels for the similarity and dedup extensions.
+"""Cosine columns for the similarity and dedup extensions.
 
 Two kernel families:
 
-- **Quantized integer kernel (the engine hot path)** — elements are
-  rounded to 7 decimal places (half away from zero, matching a
-  ``decimal(9,7)`` cast) and scaled to integers; dot products and
-  squared norms are then *exact integer arithmetic*. The integers ride
-  in float64 through BLAS matmul / einsum: every product is at most
-  ~3.6e13 and every partial sum of 64 terms at most ~6.4e15 < 2**53,
-  so all float64 additions are exact regardless of summation order.
-  The final divide/sqrt are single IEEE correctly-rounded ops, so
-  numpy, Spark, and DuckDB (summing a ``decimal(9,7)`` product list
-  and string-parsing it to double) produce bit-identical doubles.
-  Verified 0 mismatches over all 12,344 same-label pairs at sf0.01.
+- **Quantized integer kernel (the engine hot path)** — ``cosine`` runs
+  ``kernels.qcosine`` in an Arrow UDF: elements rounded to 7 decimal
+  places and scaled to integers, so dot products and squared norms are
+  exact integer arithmetic and numpy, Spark and DuckDB produce
+  bit-identical doubles (verified 0 mismatches over all 12,344
+  same-label pairs at sf0.01). ``functions/kernels.py`` holds that
+  format, its 2**53 exactness bound and the rule for shipping kernels
+  to workers; the ``oracle_*`` fragments below are its DuckDB twins.
 
 - **Exact-decimal referee kernel** (``dot``/``norm``) — the original
   Catalyst higher-order-function form with decimal(18,15) accumulation.
   Interpreted (not codegen), ~10x slower per pair; kept as the
   independent cross-check for tests, not used on the hot path.
-
-Quantization at 7dp caps |element| < 1.18 for the 2**53 exactness
-bound at 64 dims; the embeddings fixtures are bounded by |x| < 0.6
-(100x headroom on the Gram values).
 """
 
 from __future__ import annotations
@@ -29,59 +22,33 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.functions import kernels
+
 # ---------------------------------------------------------------------------
 # Quantized kernel (hot path)
 
-QUANT_DECIMALS = 7  # decimal(9,7) element quantization
-
-
-def make_qcosine_udf():
-    """Arrow-vectorized cosine over 7dp-quantized integer arithmetic.
-
-    Built as a self-contained closure: Python UDF workers unpickle the
-    kernel by value, so it must not reference module-level names from
-    this package (an external driver may host the session without the
-    package on worker PYTHONPATH). Requires equal-length arrays within
-    a batch (fixed embedding dim — true of any real embedding table).
-
-    Returns the UNROUNDED cosine; callers round with ``F.round(c, 9)``
-    JVM-side so the engine/oracle rounding pairing stays the proven
-    Spark-F.round vs DuckDB-round combination.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def qcosine(a, b):
-        import numpy as np
-        import pandas as pd
-
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        B = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        # Half-away-from-zero to match decimal(9,7) casts: dyadic floats
-        # (e.g. 0.12890625) land EXACTLY on the .5 boundary at 7dp, where
-        # np.rint's half-to-even would diverge from both SQL engines.
-        Qa = np.floor(np.abs(A) * 1e7 + 0.5) * np.sign(A)
-        Qb = np.floor(np.abs(B) * 1e7 + 0.5) * np.sign(B)
-        # Integer-valued float64: all products and 64-term sums < 2**53,
-        # every addition exact in any order.
-        dots = np.einsum("ij,ij->i", Qa, Qb) / 1e14
-        na = np.sqrt(np.einsum("ij,ij->i", Qa, Qa) / 1e14)
-        nb = np.sqrt(np.einsum("ij,ij->i", Qb, Qb) / 1e14)
-        return pd.Series(dots / (na * nb))
-
-    return qcosine
-
 
 def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity (quantized kernel), rounded to 9 decimals.
+    """Cosine similarity (``kernels.qcosine`` in an Arrow UDF), rounded
+    to 9 decimals.
 
     Rounding to 9 digits and ranking/thresholding on the rounded value
     keeps top-k sets engine-identical; the rounding itself runs JVM-side
     (Spark ``round``), the proven parity partner of DuckDB ``round``.
     """
-    return F.round(make_qcosine_udf()(a, b), 9)
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def qcosine(a, b):
+        import pandas as pd
+
+        if len(a) == 0:
+            return pd.Series([], dtype="float64")
+        return pd.Series(
+            kernels.qcosine(kernels.stack_rows(a), kernels.stack_rows(b))
+        )
+
+    return F.round(qcosine(a, b), 9)
 
 
 # ---------------------------------------------------------------------------

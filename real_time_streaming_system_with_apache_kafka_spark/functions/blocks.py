@@ -35,11 +35,11 @@ Two pieces that MUST stay in lockstep across their consumers
    group. Shuffle volume is O(corpus x n_salts) narrow rows, never
    O(corpus^2).
 
-Kept separate from the kernels themselves: the kernels must remain
-self-contained closures (unpickled by value on workers), while this is
-driver-side plan construction — a salting or quantizer change that
-reached only one consumer would break the exactly-one-group invariant
-or the oracle parity silently.
+Kept separate from the kernels themselves (``functions/kernels.py``,
+shipped to workers by value), while this is driver-side plan
+construction — a salting or quantizer change that reached only one
+consumer would break the exactly-one-group invariant or the oracle
+parity silently.
 
 Driver-state contract: the centroid matrix is O(k x dim) =
 O(sqrt(N) x dim) floats — model state, not data (at N = 10^12 vectors
@@ -55,6 +55,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.functions import kernels
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     oracle_cosine_unrounded,
 )
@@ -79,37 +80,21 @@ def block_cell_count(n: int) -> int:
 def make_assign_udf(centroids: list[list[float]]):
     """Arrow-vectorized nearest-centroid assignment: one BLAS matmul of
     the batch against the (K x dim) centroid matrix — map-side only, no
-    shuffle. Ties break to the lowest cell id (np.argmax takes the
-    first maximum). Self-contained closure: must not reference this
-    package so workers can unpickle it by value.
-
-    Cosines use the same quantized-integer kernel as qcosine
-    (functions/arrays.py): 7dp quantization on both sides, exact
-    integer dots in float64, then the identical sqrt/divide op
-    sequence — so every UNROUNDED cosine double is bit-identical to
-    the DuckDB oracle's decimal-sum form, and the argmax (with its
-    first-maximum = lowest-cell tie rule) picks the same cell on
-    every engine. That is what makes the learned quantizers
-    SQL-expressible (see block_cells_oracle_ctes and similarity's
-    unrolled-Lloyd oracle)."""
+    shuffle. ``kernels.nearest_cells`` ranks by the unrounded quantized
+    cosine, bit-identical to the DuckDB oracle's, with ties to the
+    lowest cell, so every engine picks the same cell; that makes the
+    learned quantizers SQL-expressible (see block_cells_oracle_ctes
+    and similarity's unrolled-Lloyd oracle)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
     def assign(emb):
-        import numpy as np
         import pandas as pd
 
         if len(emb) == 0:
             return pd.Series([], dtype="int32")
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        C = np.asarray(centroids, dtype=np.float64)
-        Qx = np.floor(np.abs(X) * 1e7 + 0.5) * np.sign(X)
-        Qc = np.floor(np.abs(C) * 1e7 + 0.5) * np.sign(C)
-        dots = (Qx @ Qc.T) / 1e14  # (n, k), exact ints / one IEEE div
-        nx = np.sqrt(np.einsum("ij,ij->i", Qx, Qx) / 1e14)[:, None]
-        nc = np.sqrt(np.einsum("ij,ij->i", Qc, Qc) / 1e14)[None, :]
-        cos = dots / (nx * nc)
-        return pd.Series(np.argmax(cos, axis=1).astype("int32"))
+        X, C = kernels.stack_rows(emb), kernels.stack_rows(centroids)
+        return pd.Series(kernels.nearest_cells(X, C, 1)[:, 0])
 
     return assign
 
@@ -212,35 +197,18 @@ def with_block_cells(emb: DataFrame) -> DataFrame:
 
 def make_topn_assign_udf(centroids: list[list[float]], nprobe: int):
     """Multi-probe variant of make_assign_udf: each vector's
-    ``nprobe`` nearest cells as an array<int>, ordered by the same
-    unrounded quantized cosine DESC with first-maximum = lowest-cell
-    ties (computed by iterated argmax so the tie rule is literally the
-    same op as the single-probe path). Self-contained closure."""
+    ``nprobe`` nearest cells as an array<int>, best first, with the
+    same lowest-cell tie rule."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
     def assign(emb):
-        import numpy as np
         import pandas as pd
 
         if len(emb) == 0:
             return pd.Series([], dtype="object")
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        C = np.asarray(centroids, dtype=np.float64)
-        Qx = np.floor(np.abs(X) * 1e7 + 0.5) * np.sign(X)
-        Qc = np.floor(np.abs(C) * 1e7 + 0.5) * np.sign(C)
-        dots = (Qx @ Qc.T) / 1e14
-        nx = np.sqrt(np.einsum("ij,ij->i", Qx, Qx) / 1e14)[:, None]
-        nc = np.sqrt(np.einsum("ij,ij->i", Qc, Qc) / 1e14)[None, :]
-        cos = dots / (nx * nc)
-        n = min(nprobe, cos.shape[1])
-        picks = []
-        for _ in range(n):
-            best = cos.argmax(axis=1)  # first maximum = lowest cell
-            picks.append(best)
-            cos[np.arange(len(best)), best] = -np.inf
-        out = np.stack(picks, axis=1).astype("int32")
-        return pd.Series(list(out))
+        X, C = kernels.stack_rows(emb), kernels.stack_rows(centroids)
+        return pd.Series(list(kernels.nearest_cells(X, C, nprobe)))
 
     return assign
 

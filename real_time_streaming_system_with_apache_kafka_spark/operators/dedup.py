@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.functions import kernels
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     oracle_cosine,
 )
@@ -270,15 +271,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def make_block_cosine_kernel(threshold: float):
-    """Blocked-GEMM cosine kernel for ``applyInPandas`` — a
-    self-contained closure (unpickled by value on workers; must not
-    reference this package, see functions/arrays.py:make_qcosine_udf).
+    """Blocked-GEMM cosine kernel for ``applyInPandas``.
 
     Per (block, salt) group: probe rows (this salt's vectors) x all
-    block vectors, quantized to 7dp integers and pushed through one
-    BLAS matmul. All products/partial sums are integer-valued float64
-    < 2**53, so the Gram matrix is EXACT and bit-identical to the
-    DuckDB decimal(9,7) oracle. Emits only pairs with raw cosine above
+    block vectors through ``kernels.cosine_matrix`` — one BLAS matmul
+    on 7dp-quantized integers, exact and bit-identical to the DuckDB
+    decimal(9,7) oracle. Emits only pairs with raw cosine above
     ``threshold`` minus a half-ulp-of-9dp margin; the caller applies
     the authoritative JVM-side round + filter.
     """
@@ -299,18 +297,11 @@ def make_block_cosine_kernel(threshold: float):
         if not probe_mask.any():
             return empty
 
-        def quant(rows):
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in rows])
-            # Half away from zero == decimal(9,7) cast; np.rint's
-            # half-to-even diverges on dyadic floats (e.g. 0.12890625).
-            return np.floor(np.abs(X) * 1e7 + 0.5) * np.sign(X)
-
         a, b = pdf[probe_mask], pdf[~probe_mask]
-        Qa, Qb = quant(a["embedding"].values), quant(b["embedding"].values)
-        G = Qa @ Qb.T  # exact: integer-valued float64, |G| < 2**53
-        na = np.sqrt(np.einsum("ij,ij->i", Qa, Qa) / 1e14)
-        nb = np.sqrt(np.einsum("ij,ij->i", Qb, Qb) / 1e14)
-        C = (G / 1e14) / np.outer(na, nb)
+        C = kernels.cosine_matrix(
+            kernels.stack_rows(a["embedding"].values),
+            kernels.stack_rows(b["embedding"].values),
+        )
         ids_a, ids_b = a["vec_id"].values, b["vec_id"].values
         # Emit (x, y) only when x < y and x is a probe row: each pair
         # surfaces in exactly one (block, salt(x)) group.

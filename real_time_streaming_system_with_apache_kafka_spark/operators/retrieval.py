@@ -640,7 +640,7 @@ def _make_mmr_kernel(n_select: int, rel_coef: int, div_coef: int):
     """Per-query greedy MMR kernel for ``cogroup().applyInPandas``.
 
     Self-contained closure (workers unpickle it by value — no
-    module-level references, same discipline as make_qcosine_udf).
+    package references; see the shipping rule in functions/kernels.py).
     Inputs arrive with cosines already 9dp-rounded JVM-side; the
     kernel performs only IEEE-double multiply/subtract/compare, so
     its picks are bit-identical to the oracle's SQL double math."""

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.functions import kernels
 from real_time_streaming_system_with_apache_kafka_spark.functions.arrays import (
     cosine,
     oracle_cosine,
@@ -491,17 +492,14 @@ def make_signature_udf(
 ):
     """Arrow-vectorized hyperplane signatures: one numpy matmul yields
     all N_TABLES sign-bit strings per vector. Planes come from a seeded
-    PCG64 generator — bit-reproducible across runs and machines, no
-    stored model. Self-contained closure (unpickled by value on
-    workers; must not reference this package — see
-    functions/arrays.py:make_qcosine_udf).
+    PCG64 generator (``kernels.lsh_planes``) — bit-reproducible across
+    runs and machines, no stored model.
 
-    Sign bits come from a QUANTIZED integer dot (embeddings at 7dp,
-    planes at 6dp — products <= ~3.6e13, 64-term sums <= ~2.3e15 <
-    2^53, every float64 addition exact in any order), so the bucket
-    assignment is bit-identical across BLAS implementations AND
-    SQL-expressible: the DuckDB oracle inlines the same quantized
-    planes as literals and recomputes identical signatures.
+    Sign bits come from an exact QUANTIZED integer dot (embeddings at
+    7dp, planes at 6dp, ``kernels.gram``), so the bucket assignment is
+    bit-identical across BLAS implementations AND SQL-expressible: the
+    DuckDB oracle inlines the same quantized planes as literals and
+    recomputes identical signatures.
 
     At 100 TB the bucketing is one Arrow batch scan of the embedding
     column: (batch x dim) @ (dim x tables*planes) BLAS, no shuffle.
@@ -515,20 +513,9 @@ def make_signature_udf(
 
         if len(emb) == 0:
             return pd.Series([], dtype=object)
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        planes = np.concatenate(
-            [
-                np.random.default_rng(seed + t).standard_normal(
-                    (n_planes, X.shape[1])
-                )
-                for t in range(n_tables)
-            ]
-        )
-        # Half-away-from-zero quantization, same convention as the
-        # cosine kernel (functions/arrays.py).
-        Qx = np.floor(np.abs(X) * 1e7 + 0.5) * np.sign(X)
-        Qp = np.floor(np.abs(planes) * 1e6 + 0.5) * np.sign(planes)
-        bits = (Qx @ Qp.T >= 0).astype(np.uint8) + ord("0")  # (n, T*P)
+        Qx = kernels.quantize(kernels.stack_rows(emb))
+        Qp = kernels.lsh_planes(seed, n_tables, n_planes, Qx.shape[1])
+        bits = (kernels.gram(Qx, Qp) >= 0).astype(np.uint8) + ord("0")  # (n, T*P)
         return pd.Series(
             [
                 [
@@ -872,19 +859,9 @@ def _lsh_sql_parts() -> tuple[str, str, str]:
     multi-probe (Hamming-1 flip) bucket keys. Shared by
     sim_lsh_topk / sim_hard_negatives / decontaminate_semantic so the
     candidate generator can never drift between oracles."""
-    import numpy as np
-
-    planes = np.concatenate(
-        [
-            np.random.default_rng(_LSH_SEED + t).standard_normal(
-                (N_PLANES, EMBEDDING_DIM)
-            )
-            for t in range(N_TABLES)
-        ]
-    )
-    qp = (np.floor(np.abs(planes) * 1e6 + 0.5) * np.sign(planes)).astype(
-        np.int64
-    )
+    qp = kernels.lsh_planes(
+        _LSH_SEED, N_TABLES, N_PLANES, EMBEDDING_DIM
+    ).astype("int64")
 
     def bit(t: int, p: int) -> str:
         w = ", ".join(str(v) for v in qp[t * N_PLANES + p])
@@ -1004,17 +981,14 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def make_block_knn_kernel():
-    """Blocked-GEMM 1-NN kernel for ``applyInPandas`` — self-contained
-    closure (unpickled by value on workers, must not reference this
-    package; see functions/arrays.py:make_qcosine_udf).
+    """Blocked-GEMM 1-NN kernel for ``applyInPandas``.
 
     Per (block, salt) group: this salt's probe rows x ALL block
-    vectors through one BLAS matmul on 7dp-quantized integers (the
-    Gram matrix is exact — every float64 addition is of integer-valued
-    operands < 2**53), then a per-row argmax with ties resolved to the
-    SMALLEST neighbor id via an explicit min over the tie set (numpy's
-    argmax first-occurrence rule would depend on row order, which
-    Spark does not guarantee)."""
+    vectors through ``kernels.cosine_matrix`` (one exact BLAS matmul
+    on 7dp-quantized integers), then a per-row argmax with ties
+    resolved to the SMALLEST neighbor id via an explicit min over the
+    tie set (numpy's argmax first-occurrence rule would depend on row
+    order, which Spark does not guarantee)."""
 
     def block_nn(pdf):
         import numpy as np
@@ -1032,18 +1006,11 @@ def make_block_knn_kernel():
         if not probe_mask.any() or probe_mask.all():
             return empty
 
-        def quant(rows):
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in rows])
-            # Half away from zero == decimal(9,7) cast (np.rint's
-            # half-to-even diverges on dyadic floats).
-            return np.floor(np.abs(X) * 1e7 + 0.5) * np.sign(X)
-
         a, b = pdf[probe_mask], pdf[~probe_mask]
-        Qa, Qb = quant(a["embedding"].values), quant(b["embedding"].values)
-        G = Qa @ Qb.T  # exact: integer-valued float64, |G| < 2**53
-        na = np.sqrt(np.einsum("ij,ij->i", Qa, Qa) / 1e14)
-        nb = np.sqrt(np.einsum("ij,ij->i", Qb, Qb) / 1e14)
-        C = (G / 1e14) / np.outer(na, nb)
+        C = kernels.cosine_matrix(
+            kernels.stack_rows(a["embedding"].values),
+            kernels.stack_rows(b["embedding"].values),
+        )
         ids_a, ids_b = a["vec_id"].values, b["vec_id"].values
         C[ids_a[:, None] == ids_b[None, :]] = -np.inf
         best = C.max(axis=1)
@@ -1250,74 +1217,26 @@ PQ_CB_BASE = 100  # vec_id PQ_CB_BASE .. PQ_CB_BASE+K_CODES-1 seed the codebook
 PQ_SHORTLIST = 50  # ADC candidates per query fed to the exact rerank
 
 
-def _pq_quant_rows(rows):
-    """Normalize-then-quantize: 7dp quantization, exact integer norm,
-    one IEEE sqrt + divide, requantize to 1e7-scaled integers.
-
-    Byte-for-byte twin of ``norm_quant`` inside make_pq_encode_udf
-    (which cannot reference this module — see note there); keep the
-    two in lockstep.
-
-    Normalizing first makes L2 ADC distance rank like cosine (PQ's
-    standard cosine recipe). Reproducibility: every step is either
-    exact integer math or a single correctly-rounded IEEE op on
-    identical inputs, and the DuckDB twin spells out the SAME op
-    sequence (floor(abs(x/n)*1e7+0.5)*sign) — so both engines produce
-    bit-identical integer vectors."""
-    import numpy as np
-
-    A = np.stack([np.asarray(v, dtype=np.float64) for v in rows])
-    Q1 = np.floor(np.abs(A) * 1e7 + 0.5) * np.sign(A)
-    n = np.sqrt(np.einsum("ij,ij->i", Q1, Q1))  # exact int sum, IEEE sqrt
-    # max(n, 1): n is integer-valued post-quantization (smallest
-    # nonzero norm is 1), so the guard only rewrites the all-zero
-    # embedding — 0/0 NaN codes would diverge between engines; with the
-    # guard both deterministically emit the zero vector.
-    Xn = Q1 / np.maximum(n, 1.0)[:, None]
-    return np.floor(np.abs(Xn) * 1e7 + 0.5) * np.sign(Xn)
-
-
 def make_pq_encode_udf(codebook_raw: list[list[float]]):
     """Arrow-vectorized PQ encoder: per row, the argmin-subdistance
     code in each subspace (ties to the lowest code id — matching the
-    oracle's (dist, cid) row_number order). Self-contained closure for
-    worker unpickling."""
+    oracle's (dist, cid) row_number order). Vectors and codebook are
+    normalized and requantized by ``kernels.pq_quantize``; normalizing
+    first makes L2 ADC distance rank like cosine (PQ's standard cosine
+    recipe), and the DuckDB twin spells out the same op sequence."""
     from pyspark.sql.functions import pandas_udf
 
-    cb_raw = [list(map(float, v)) for v in codebook_raw]
-    m_sub, d_sub = M_SUB, D_SUB
+    CB = kernels.pq_quantize(codebook_raw)
 
     @pandas_udf("array<int>")
     def encode(col):
-        import numpy as np
         import pandas as pd
 
         if len(col) == 0:
             return pd.Series([], dtype=object)
-        # NOTE: byte-for-byte twin of module-level _pq_quant_rows —
-        # duplicated because this closure must unpickle WITHOUT the
-        # package on worker PYTHONPATH (cloudpickle serializes captured
-        # module functions by reference). Drift between the two is
-        # pinned by tests/test_similarity.py::test_pq_quantizer_twins_agree.
-        def norm_quant(rows):
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in rows])
-            Q1 = np.floor(np.abs(A) * 1e7 + 0.5) * np.sign(A)
-            n = np.sqrt(np.einsum("ij,ij->i", Q1, Q1))
-            Xn = Q1 / np.maximum(n, 1.0)[:, None]  # zero-vector guard
-            return np.floor(np.abs(Xn) * 1e7 + 0.5) * np.sign(Xn)
-
-        CB = norm_quant(cb_raw)
-        Q = norm_quant(list(col))
-        codes = np.empty((len(col), m_sub), dtype=np.int32)
-        for m in range(m_sub):
-            sub = Q[:, m * d_sub : (m + 1) * d_sub]
-            cb = CB[:, m * d_sub : (m + 1) * d_sub]
-            # Integer-valued float64: every square and d_sub-term sum
-            # < 2**53 — exact, so argmin matches the SQL twin; argmin
-            # returns the FIRST minimum = lowest code id on ties.
-            d2 = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-            codes[:, m] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
+        d2 = kernels.pq_distances(kernels.pq_quantize(list(col)), CB, M_SUB)
+        # argmin returns the FIRST minimum = lowest code id on ties.
+        return pd.Series(list(d2.argmin(axis=2).astype("int32")))
 
     return encode
 
@@ -1341,17 +1260,11 @@ def _pq_model(spark: SparkSession, emb: DataFrame):
         .select("vec_id", "embedding")
         .collect()
     )
-    CB = _pq_quant_rows(cb_raw)
+    CB = kernels.pq_quantize(cb_raw)
     luts = []
     for r in sorted(q_rows, key=lambda r: r.vec_id):
-        Qv = _pq_quant_rows([r.embedding])[0]
-        lut: list[int] = []
-        for m in range(M_SUB):
-            sub = Qv[m * D_SUB : (m + 1) * D_SUB]
-            cb = CB[:, m * D_SUB : (m + 1) * D_SUB]
-            d2 = ((sub[None, :] - cb) ** 2).sum(-1)
-            lut.extend(int(x) for x in d2)
-        luts.append((int(r.vec_id), lut))
+        (d2,) = kernels.pq_distances(kernels.pq_quantize([r.embedding]), CB, M_SUB)
+        luts.append((int(r.vec_id), [int(x) for x in d2.ravel()]))
     q_lut = spark.createDataFrame(luts, "query_id long, lut array<long>")
     return cb_raw, q_lut
 
@@ -1472,7 +1385,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (PQ, IVF+PQ, Matryoshka prefix dims).
 
 SQ_SHORTLIST = 50  # same rerank budget as the flat PQ scan
-# Spark SQL twin of _pq_quant_rows / the oracle's q1t+qn CTEs:
+# Spark SQL twin of kernels.pq_quantize / the oracle's q1t+qn CTEs:
 # 7dp-quantize, L2-normalize (IEEE sqrt/divide are correctly rounded,
 # so doubles agree bit-for-bit with numpy and DuckDB), re-quantize to
 # integer-valued bigints. No Python UDF, unlike PQ's argmin encode.
@@ -1604,7 +1517,7 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared normalize-then-quantize CTE block (q1t + qn): the SQL twin
-# of _pq_quant_rows, used by every quantization oracle (PQ, IVF+PQ,
+# of kernels.pq_quantize, used by every quantization oracle (PQ, IVF+PQ,
 # SQ8) so the vector grid can never drift between twins.
 _NORM_QUANT_CTES = """\
         q1t AS (
@@ -1622,7 +1535,7 @@ _NORM_QUANT_CTES = """\
                             * (CASE WHEN x < 0 THEN -1 ELSE 1 END)) AS q2
             FROM (
                 -- greatest(.., 1): zero-vector guard, twin of the
-                -- np.maximum(n, 1.0) in _pq_quant_rows
+                -- np.maximum(n, 1.0) in kernels.pq_quantize
                 SELECT vec_id, q1,
                        greatest(
                            sqrt(cast(list_sum(list_transform(q1,

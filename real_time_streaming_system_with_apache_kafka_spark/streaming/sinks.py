@@ -22,7 +22,9 @@ from pyspark.sql.types import StructType
 
 
 def _is_target_absent(exc) -> bool:
-    """True only for 'target does not exist yet' AnalysisExceptions.
+    """True only for 'target does not exist yet' AnalysisExceptions
+    (a parquet directory without files counts as absent: it holds no
+    keys).
 
     A genuine schema/column mismatch on the existing-keys read must NOT
     be treated as first-batch-bootstrap — swallowing it would skip the
@@ -37,7 +39,11 @@ def _is_target_absent(exc) -> bool:
                 cls = None
             break
     if cls is not None:
-        return cls in {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"}
+        return cls in {
+            "PATH_NOT_FOUND",
+            "TABLE_OR_VIEW_NOT_FOUND",
+            "UNABLE_TO_INFER_SCHEMA",
+        }
     # Legacy/uncategorized fallback: match the message shape.
     msg = str(exc)
     return "Path does not exist" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg
@@ -70,11 +76,16 @@ def keyed_upsert_foreach_batch(
     For very large targets, key reconciliation belongs in the streaming
     state (``dedup_trades``) where it is O(batch); this sink-side check
     re-reads only the target's key columns (column-pruned scan).
+
+    A target that exists before the sink's first batch must carry every
+    key column, or the batch fails with ``ValueError``.
     """
+    checked = False  # this sink has checked or written the target
 
     def upsert(batch: DataFrame, epoch_id: int) -> None:
         from pyspark.errors import AnalysisException
 
+        nonlocal checked
         spark = batch.sparkSession
         deduped = batch.dropDuplicates(key_cols)
         try:
@@ -82,9 +93,18 @@ def keyed_upsert_foreach_batch(
             # a driver-local os.path probe would silently skip the
             # anti-join everywhere but bare local paths. The declared
             # key schema spares a schema-inference job per batch, and
-            # an empty target directory reads as no rows. A key column
-            # missing from the target's files would read as null, so
-            # the target must be one this sink wrote.
+            # an empty target directory reads as no rows. But under it
+            # a key missing from the target's files reads as null and
+            # matches nothing, so a target this sink did not create is
+            # checked once (one schema job).
+            if not checked:
+                names = spark.read.parquet(target_path).columns
+                missing = [k for k in key_cols if k not in names]
+                if missing:
+                    raise ValueError(
+                        f"upsert target {target_path} has no key column "
+                        f"{missing}; it holds {names}"
+                    )
             key_schema = StructType([batch.schema[k] for k in key_cols])
             existing = spark.read.schema(key_schema).parquet(target_path)
             deduped = deduped.join(existing, on=key_cols, how="left_anti")
@@ -95,6 +115,7 @@ def keyed_upsert_foreach_batch(
             if not _is_target_absent(e):
                 raise
         deduped.write.mode("append").parquet(target_path)
+        checked = True
 
     return upsert
 

@@ -233,43 +233,6 @@ def test_ivfpq_recall_vs_ivf_and_exact_values(spark, sf_dir):
         assert ivf[k] == ivfpq[k]
 
 
-def test_pq_quantizer_twins_agree(spark, sf_dir):
-    """The worker-side quantizer duplicated inside make_pq_encode_udf
-    (self-contained closure) must stay byte-for-byte with the
-    module-level _pq_quant_rows used for LUT building: codes computed
-    through the UDF must equal codes recomputed driver-side from
-    _pq_quant_rows on the same vectors."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    emb = similarity.load(spark, "embeddings", sf_dir)
-    cb_rows = (
-        emb.filter(
-            (F.col("vec_id") >= similarity.PQ_CB_BASE)
-            & (F.col("vec_id") < similarity.PQ_CB_BASE + similarity.K_CODES)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    cb_raw = [r.embedding for r in sorted(cb_rows, key=lambda r: r.vec_id)]
-    sample = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
-    encode = similarity.make_pq_encode_udf(cb_raw)
-    udf_codes = {
-        r.vec_id: list(r.codes)
-        for r in sample.select("vec_id", encode("embedding").alias("codes")).collect()
-    }
-    CB = similarity._pq_quant_rows(cb_raw)
-    for r in sample.collect():
-        Qv = similarity._pq_quant_rows([r.embedding])[0]
-        expect = []
-        for m in range(similarity.M_SUB):
-            sub = Qv[m * similarity.D_SUB : (m + 1) * similarity.D_SUB]
-            cb = CB[:, m * similarity.D_SUB : (m + 1) * similarity.D_SUB]
-            d2 = ((sub[None, :] - cb) ** 2).sum(-1)
-            expect.append(int(np.argmin(d2)))
-        assert udf_codes[r.vec_id] == expect, r.vec_id
-
-
 def test_prefix_topk_recall_and_exact_values(spark, sf_dir):
     """Matryoshka prefix search: the 16-dim prefix pass plus exact
     rerank recovers >= 0.5 of brute force's top-5 on the synthetic
@@ -431,3 +394,29 @@ def test_pca_gram_rejects_out_of_contract_magnitudes(spark, tmp_path):
     )
     with pytest.raises(Exception, match="exact int64 Gram bound"):
         similarity.embed_pca_power(spark, str(tmp_path))
+
+
+@pytest.mark.parametrize("entry", ["sim_bruteforce_topk", "sim_knn_join"])
+def test_cosine_kernels_reject_out_of_contract_magnitudes(spark, tmp_path, entry):
+    """The exact quantized cosine needs dim * max|Qa| * max|Qb| < 2^53
+    (|x| below ~1.18 at 64 dims). A component of 2.0 must fail loudly
+    in the row-wise and the blocked kernel instead of summing
+    inexactly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dim = similarity.EMBEDDING_DIM
+    vecs = [[0.1 * (1 + i % 3)] * dim for i in range(8)]
+    vecs[6][3] = 2.0
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(8), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0, 1] * 4, pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    with pytest.raises(Exception, match="exact float64 range"):
+        getattr(similarity, entry)(spark, str(tmp_path)).collect()

@@ -186,6 +186,18 @@ def test_keyed_upsert_sink_starts_on_an_empty_target(spark, wire_dir, tmp_path):
     assert stored.select("trade_id").distinct().count() == n_base
 
 
+def test_keyed_upsert_sink_refuses_a_target_without_its_key(spark, tmp_path):
+    """Read under the declared key schema, a target written with another
+    key column reads ``trade_id`` as null and matches nothing, so the
+    sink must fail the batch instead of appending duplicates."""
+    target = str(tmp_path / "foreign")
+    spark.createDataFrame([(1,), (2,)], "other_id long").write.parquet(target)
+    upsert = sinks.keyed_upsert_foreach_batch(target, ["trade_id"])
+    with pytest.raises(ValueError, match="no key column"):
+        upsert(spark.createDataFrame([(1,), (2,)], "trade_id long"), 0)
+    assert spark.read.parquet(target).count() == 2
+
+
 def test_keyed_upsert_sink_replays_a_crashed_batch_exactly_once(
     spark, wire_dir, tmp_path
 ):

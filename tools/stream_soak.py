@@ -75,6 +75,31 @@ WATERMARK = "2 minutes"
 DUP_EVERY_N = 20
 
 
+def stop_between_triggers(query, trigger_s: int) -> bool:
+    """Stop ``query`` while no trigger runs its tasks, and return
+    whether that succeeded. Stopping mid-trigger interrupts the tasks,
+    and each logs "Aborted commit" ERROR lines.
+
+    A query that has fallen behind its trigger interval starts the next
+    trigger as soon as one ends, so it is never idle: it is stopped as
+    soon as a trigger finishes, while the next one is still planning.
+    The wait is bounded by twice the longer of the trigger interval and
+    the last trigger's duration; a query whose trigger outlasts that is
+    stopped mid-trigger."""
+    last = query.lastProgress or {}
+    last_s = (last.get("durationMs") or {}).get("triggerExecution", 0) / 1e3
+    deadline = time.monotonic() + 2 * max(trigger_s, last_s)
+    while query.status["isTriggerActive"]:
+        if (query.lastProgress or {}).get("batchId") != last.get("batchId"):
+            break
+        if time.monotonic() > deadline:
+            query.stop()
+            return False
+        time.sleep(0.01)
+    query.stop()
+    return True
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seconds", type=int, default=300)
@@ -156,6 +181,7 @@ def main() -> None:
     t0 = time.monotonic()
     rows_in = 0.0
     seen_batches: dict[str, set[int]] = {n: set() for n, _ in queries}
+    stopped_mid_trigger = []
     try:
         while time.monotonic() - t0 < args.seconds:
             time.sleep(5)
@@ -195,12 +221,14 @@ def main() -> None:
                             ),
                         }
                     )
+        elapsed = time.monotonic() - t0
         for name, query in queries:
             if query.exception():
                 raise RuntimeError(f"{name}: {query.exception()}")
     finally:
-        for _, query in queries:
-            query.stop()
+        for name, query in queries:
+            if not stop_between_triggers(query, args.trigger):
+                stopped_mid_trigger.append(name)
         spark.stop()
 
     # Bounded verdict: state must PLATEAU — the final-third MEAN may
@@ -268,10 +296,10 @@ def main() -> None:
 
     out = {
         "metric": "stream_soak_bounded_state",
-        "duration_s": round(time.monotonic() - t0, 1),
+        "duration_s": round(elapsed, 1),
         "target_rate_rows_per_s": args.rate,
         "rows_processed": int(rows_in),
-        "achieved_rate_rows_per_s": round(rows_in / max(1e-9, time.monotonic() - t0)),
+        "achieved_rate_rows_per_s": round(rows_in / max(1e-9, elapsed)),
         "state_store": "rocksdb",
         "watermark": WATERMARK,
         "trigger_interval_s": args.trigger,
@@ -279,6 +307,9 @@ def main() -> None:
         "shuffle_partitions": args.shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions")),
         "dup_every_n": DUP_EVERY_N,
         "bounded": bounded,
+        # Queries still inside a trigger when the run ended: they could
+        # not keep up, and their interrupted tasks logged ERROR lines.
+        "stopped_mid_trigger": stopped_mid_trigger,
         "state_operators": per_op,
         "samples": samples,
     }
